@@ -1,72 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main (driver-run per round → BENCH_r{N}.json): headline
-  * queries over SPARK_GRAFT_SF_DIR, one JSON line on stdout.
+/** Benchmark main: the headline queries over SPARK_GRAFT_SF_DIR, one JSON
+  * line on stdout and in BENCH_LAST.json.
   *
-  * Each query is materialized through the noop sink — full computation,
-  * zero result-collection cost. Framework queries pre-stage their
-  * partitioned inputs in an untimed warmup so the timings measure query
-  * execution, not one-time test-harness staging.
+  * - Each query runs through the noop sink: full computation, no result
+  *   collection. Queries that stage scratch inputs run once, untimed, first.
+  * - A query that throws is named in `"errors"` and the process exits
+  *   nonzero.
+  * - Reps are interleaved (rep 1 of every query, then rep 2, ...), so a
+  *   loaded window hits one rep of many queries, not every rep of one.
+  *   `"queries"` holds each query's min over reps (SPARK_GRAFT_BENCH_REPS,
+  *   default 3); `"reps_detail"` holds every rep.
+  * - Per sweep the artifact records `"loadavg"`, `"loadavg_other"` (load
+  *   minus this process's own CPU), `"jvm"` (gc_ms, heap_mb, own_cores,
+  *   other_cores, iowait_pct, steal_pct) and `"host_canary_mops_per_sec"`.
+  * - `"window"` is [[runLabel]]'s verdict on those series: "calm",
+  *   "loaded" or "disturbed".
+  * - The first sweep waits for a 1-min load under 2 (up to
+  *   SPARK_GRAFT_BENCH_CALM_WAIT_SECS, default 360); a later sweep waits
+  *   out co-tenant load from a shared budget
+  *   (SPARK_GRAFT_BENCH_BURST_BUDGET_SECS, default 180).
   *
-  * Failure visibility: a query that throws records an `"err"` entry in the
-  * output JSON (`"errors":{name:msg}`) and the process exits nonzero — a
-  * broken query can never ship a plausible-looking bench line.
-  *
-  * SELF-ADJUDICATION (three rounds of phantom regressions — r5 p18 3.15 s,
-  * r7 p14 8.69 s / p18 15.52 s — were host co-tenancy, each costing a
-  * same-binary judge re-run to adjudicate; this harness makes a loaded
-  * window identifiable from the artifact alone):
-  * - reps are INTERLEAVED (rep 1 of every query, then rep 2 of every
-  *   query, ...) so one loaded window degrades one rep of many queries
-  *   instead of all reps of one query — the min still lands in a calm rep;
-  * - `"reps_detail"` records every per-rep second (the min hides a 5x
-  *   rep-to-rep spread; the detail shows it);
-  * - `"loadavg"` records the 1-min /proc/loadavg read at the START of
-  *   each rep sweep plus a final read — a reading taken at load 8 on a
-  *   32-cpu box explains itself;
-  * - (r18) `"window":"disturbed"` + `"disturbed":[names]` when any
-  *   query's NON-FIRST reps spread more than 4x max/min (the first rep
-  *   is deterministic warmup — codegen/JIT/first-scan — and grows with
-  *   SF, so it is excluded when 3+ reps exist) — the r17 artifact ran a
-  *   16 s q01 MIDDLE rep under a "calm" label because an iowait/page-
-  *   cache stall is invisible to busy-jiffy accounting; per-sweep
-  *   `"iowait_pct"`/`"steal_pct"` series ([[statPctOver]]) say which
-  *   kind of stall a bad sweep met;
-  * - `"window"` states the adjudication outright: "calm" ONLY when
-  *   EVERY sweep started with other-load < 2 (r13 — the r12 artifact
-  *   labeled itself calm off its first sweep, then absorbed a mid-run
-  *   burst the judge had to re-adjudicate). Other-load =
-  *   `"loadavg_other"` = raw loadavg minus the bench's OWN trailing
-  *   CPU usage — at a rep boundary the raw 1-min loadavg mostly
-  *   measures the sweep that just finished, and gating on it would
-  *   drain the wait budget on self-decay and mislabel an idle host.
-  *   A sweep meeting a genuine co-tenant burst waits it out from a
-  *   bounded shared budget (SPARK_GRAFT_BENCH_BURST_BUDGET_SECS,
-  *   default 180), and only degrades the label when the budget
-  *   drains. In a loaded artifact even the mins are inflated and the
-  *   honest comparison is a calm re-run, not the prior round's number
-  *   (the r9 artifact, all sweeps at load ≥ 3.9, read 2-8x high).
-  *   (r15) "calm" ADDITIONALLY requires every sweep to have RUN calm:
-  *   per-sweep co-tenant CPU (`"jvm"."other_cores"`, /proc/stat busy-
-  *   jiffy deltas minus own process CPU — counters, not the decaying
-  *   loadavg EWMA the self-subtraction can erase a burst from) must
-  *   stay < 2 cores. BENCH_r14 labeled itself calm while its own
-  *   telemetry showed the machine leaving (own_cores 5.8 -> 2.7, walls
-  *   rising, GC flat); the label now CONSUMES that telemetry
-  *   ([[windowLabel]], unit-tested with exactly that shape).
-  * - `"jvm"` (r14) ships per-sweep self-diagnosis so a monotone-
-  *   INCREASING reps_detail (the BENCH_r13 shape) is attributable from
-  *   the artifact without a judge re-run: `gc_ms` (GC-time delta over
-  *   the sweep), `heap_mb` (used heap at sweep end), `own_cores`
-  *   (process-CPU cores averaged over the sweep). Rising gc_ms/heap_mb
-  *   with own_cores near the machine width = the bench's own memory
-  *   pressure accumulating across sweeps; flat GC with own_cores LOW
-  *   while walls rise = the time went to a co-tenant (and
-  *   loadavg_other should corroborate).
-  * Headline `"queries"` values remain the per-query MIN across reps
-  * (default SPARK_GRAFT_BENCH_REPS=3), comparable with every prior round.
+  * The incidents behind these rules are in BASELINE.md.
   */
 object Bench {
 
@@ -81,18 +36,14 @@ object Bench {
     "p07_minhash_lsh", "p12_ann_lsh", "p14_dup_clusters",
     "p18_incremental_dedup")
 
-  /** The sf1 (10x) cadence set (VERDICT r16 #8): one representative per
-    * scale-sensitive family — full-scan agg, the distributed RANGE
-    * frame, LSH banding, connected components, incremental dedup, and
-    * the PQ encode+probe path. Select with SPARK_GRAFT_BENCH_SET=sf1
-    * against a ScaleUp'd dir, where per-query walls are seconds-scale
-    * and host noise stops dominating round-over-round drift. */
+  /** The sf1 (10x) set, SPARK_GRAFT_BENCH_SET=sf1, for a ScaleUp'd dir:
+    * one representative per scale-sensitive family — full-scan agg, the
+    * distributed RANGE frame, LSH banding, connected components,
+    * incremental dedup, the PQ encode+probe path, and the shuffle join the
+    * q02 bloom pre-filter targets. */
   private val sf1Headline = List(
     "q01_agg_pricing", "q35_range_frame", "p07_minhash_lsh",
     "p14_dup_clusters", "p18_incremental_dedup", "p38_pq_ann",
-    // r21 (additive — existing rows unchanged): the shuffle join whose
-    // scale shape the bloom pre-filter targets; invisible at sf0.1
-    // where AQE broadcasts it
     "q02_join_agg_topk")
 
   private def loadavg1m(): Double =
@@ -100,15 +51,9 @@ object Bench {
       .split("\\s+").head.toDouble
     catch { case _: Throwable => -1.0 }
 
-  // ---- self-load correction (r13): after an all-core sweep the 1-min
-  // loadavg carries the bench's OWN work for the next ~minute (a 30 s
-  // 32-wide sweep alone contributes ~16), so gating mid-run waits and
-  // the calm label on the RAW loadavg would burn the burst budget on
-  // self-decay and label an idle machine "loaded". The co-tenant
-  // ("other") load is estimated as loadavg minus this process's average
-  // CPU-core usage over the same trailing window (process CPU time
-  // deltas — the sliding-window kernel differs from loadavg's EWMA by
-  // at most a few cores during decay, which the threshold absorbs).
+  // Co-tenant ("other") load = 1-min loadavg minus this process's average
+  // cores over the same trailing minute, so the bench's own just-finished
+  // sweep never reads as someone else's load.
   private val osBean =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case b: com.sun.management.OperatingSystemMXBean => Some(b)
@@ -133,28 +78,11 @@ object Bench {
     if (raw < 0) raw else math.max(0.0, raw - selfLoad1m())
   }
 
-  // ---- per-sweep co-tenant CPU, measured not inferred (r15): the r14
-  // artifact labeled itself "calm" while its own jvm telemetry showed
-  // the machine going elsewhere (own_cores 5.8 -> 2.7, walls rising,
-  // GC flat) — loadavg_other's EWMA self-subtraction erased a genuine
-  // burst. /proc/stat is a COUNTER, not an average: (busy-jiffies delta
-  // over the sweep) scaled to cores, minus this process's own CPU-time
-  // delta, IS the co-tenant's average core usage during that exact
-  // window — no decay arithmetic to fool. -1 when /proc/stat is
-  // unavailable (never counts as calm).
-  /** (busyJiffies, totalJiffies, hostCpus) from /proc/stat. Busy sums
-    * user..steal ONLY — guest/guest_nice are already folded into
-    * user/nice on Linux, so including them double-counts VM guests.
-    * hostCpus is the count of per-cpu lines: /proc/stat is NOT cgroup-
-    * namespaced, so the aggregate line spans the HOST's CPUs —
-    * Runtime.availableProcessors (quota-aware under containers) would
-    * under-scale the busy fraction and read a saturated host as calm. */
-  /** Full /proc/stat aggregate snapshot: (busy, total, iowait, steal,
-    * hostCpus). iowait and steal ship separately (r18): the r17 artifact
-    * carried an 8x q01 stall with other_cores 0.0 — a page-cache/IO
-    * stall is INVISIBLE to busy-jiffy accounting (iowait is idle time),
-    * and steal means the hypervisor took the cycles; both series let the
-    * artifact name which kind of disturbance a bad sweep met. */
+  /** /proc/stat aggregate snapshot: (busy, total, iowait, steal,
+    * hostCpus), in jiffies. Busy sums user..steal minus idle and iowait;
+    * guest time is already inside user/nice. hostCpus counts the per-cpu
+    * lines: /proc/stat spans the host, not the container, so
+    * availableProcessors would under-scale the busy fraction. */
   private def procStatFull(): Option[(Long, Long, Long, Long, Int)] =
     try {
       val lines = scala.io.Source.fromFile("/proc/stat").getLines().toList
@@ -167,9 +95,6 @@ object Bench {
       if (nCpus < 1 || total <= 0)
         None else Some((busy, total, iowait, steal, nCpus))
     } catch { case _: Throwable => None }
-
-  private def procStatJiffies(): Option[(Long, Long, Int)] =
-    procStatFull().map { case (b, t, _, _, n) => (b, t, n) }
 
   /** Percentage of a sweep's jiffy capacity spent in `pick`ed state
     * (iowait or steal) between two [[procStatFull]] snapshots; -1.0
@@ -184,7 +109,9 @@ object Bench {
       case _ => -1.0
     }
 
-  /** Co-tenant cores over a sweep from /proc/stat + own-CPU deltas. */
+  /** Co-tenant cores over a sweep: busy-jiffy delta scaled to host cores
+    * minus this process's own CPU over the same wall; -1.0 when /proc/stat
+    * is unavailable. */
   private[graft] def otherCoresOver(stat0: Option[(Long, Long, Int)],
                                     stat1: Option[(Long, Long, Int)],
                                     ownCpuNanos: Long,
@@ -198,39 +125,20 @@ object Bench {
       case _ => -1.0
     }
 
-  /** The window-label decision, pure so the rule itself is unit-testable
-    * (VERDICT r14 #2: the label must CONSUME the telemetry — a run with
-    * the BENCH_r14 shape, pre-sweep other-load clean but co-tenant CPU
-    * present DURING the sweeps, must self-label "loaded"). "calm" =
-    * every sweep both STARTED calm (1-min other-load < 2 cores) and RAN
-    * calm (measured co-tenant CPU < 2 cores for the sweep's duration);
-    * any unavailable reading (-1) degrades to "loaded". */
+  /** "calm" when every sweep started with other-load under 2 cores and
+    * ran with co-tenant CPU under 2 cores; any unavailable reading (-1)
+    * makes it "loaded". */
   def windowLabel(preSweepOtherLoad: Seq[Double],
                   sweepOtherCores: Seq[Double]): String =
     if (preSweepOtherLoad.nonEmpty && sweepOtherCores.nonEmpty &&
         preSweepOtherLoad.forall(l => l >= 0 && l < 2.0) &&
         sweepOtherCores.forall(c => c >= 0 && c < 2.0)) "calm" else "loaded"
 
-  /** Per-query rep-dispersion rule (r18, VERDICT r17 #2): BENCH_r17
-    * labeled itself "calm" while q01's middle rep ran 16.18 s against
-    * 2.1 s neighbors — the CPU-side telemetry is blind to iowait/
-    * page-cache stalls (iowait is idle time to the busy counters) and
-    * to one-off hypervisor steals shorter than a jiffy-window average.
-    * The reps themselves are the most direct stall detector — but the
-    * FIRST rep is excluded when 3+ reps exist: a fresh JVM's first rep
-    * carries deterministic warmup (whole-stage codegen compile, C2 JIT,
-    * first parquet-footer reads) that GROWS with data scale (~3x at
-    * sf0.1, measured 5x at sf10 on an idle machine), so judging it
-    * would permanently label every large-SF run "disturbed" and the
-    * label would stop carrying information. A stall, by contrast, hits
-    * a NON-first rep (the r17 artifact: 16.18 s MIDDLE rep between
-    * 2.1 s neighbors — still flagged by the non-first rule). Within the
-    * non-first reps, max/min > `maxRatio` cannot be warmup (rep 2
-    * onward runs compiled code over a warm cache) nor plan variance
-    * (same plan every rep) — something took the machine mid-rep.
-    * With only 2 reps there is no warmup-free pair, so both are judged
-    * (conservative: a 2-rep run can still flag). Returns the offending
-    * query names, sorted. */
+  /** Queries whose reps spread more than `maxRatio` (max/min), sorted.
+    * With 3+ reps the first is left out: it carries codegen, JIT and
+    * first-scan warmup, which grows with data scale. Later reps run the
+    * same plan over warm code, so a wide spread among them means the
+    * machine was taken mid-rep. With 2 reps both are judged. */
   def disturbedQueries(repsByQuery: Map[String, Seq[Double]],
                        maxRatio: Double = 4.0): List[String] =
     repsByQuery.toList.collect {
@@ -240,15 +148,10 @@ object Bench {
       } => q
     }.sorted
 
-  /** r19 (ADVICE r18 #4): the first-rep exclusion above leaves a blind
-    * spot — a genuine stall landing in the FIRST rep of a 3+-rep run is
-    * shape-indistinguishable from warmup. This names the queries whose
-    * first rep exceeds `maxRatio` x the non-first MEDIAN (the median,
-    * not the min, so one fast later rep cannot manufacture an outlier).
-    * Whether such an outlier is warmup or a stall is then adjudicated
-    * from the FIRST sweep's telemetry by [[runLabel]]; the names and the
-    * telemetry always ship in the artifact ("first_rep_outliers") so a
-    * judge can re-adjudicate without a re-run. */
+  /** Queries (3+ reps) whose first rep exceeds `maxRatio` x the median
+    * of the later reps, sorted. [[runLabel]] decides from the first
+    * sweep's steal whether that is warmup or a stall; the names always
+    * ship in `"first_rep_outliers"`. */
   def firstRepOutliers(repsByQuery: Map[String, Seq[Double]],
                        maxRatio: Double = 4.0): List[String] =
     repsByQuery.toList.collect {
@@ -259,24 +162,11 @@ object Bench {
       } => q
     }.sorted
 
-  /** The full adjudication: dispersion trumps the CPU-side label — a
-    * run whose CPU telemetry reads calm but whose reps carry a >4x
-    * within-query spread labels "disturbed" (the artifact names the
-    * queries in `"disturbed"`), so a stall-contaminated total can never
-    * again ship under a "calm" banner.
-    *
-    * (r19, ADVICE r18 #4) A first-rep outlier — excluded from the
-    * dispersion rule as presumptive warmup — is CROSS-CHECKED against
-    * the first sweep's steal percentage before being accepted: warmup is
-    * codegen + JIT + first-scan, which spends CPU and iowait, NEVER
-    * hypervisor steal, so `firstSweepStealPct` >= 1% alongside a first-
-    * rep outlier means the hypervisor took the first sweep and the run
-    * labels "disturbed". iowait deliberately does NOT flip the label on
-    * its own: a cold first scan at large SF legitimately runs at 29%
-    * iowait (the sf100 q01 probe — genuine warmup), so an iowait-heavy
-    * first-rep outlier is accepted as warmup but reported verbatim in
-    * "first_rep_outliers" (ratio + first-sweep iowait/steal) for
-    * artifact-side re-adjudication. */
+  /** The run's label. "disturbed" when any query's later reps spread
+    * more than 4x, or when a first-rep outlier met >= 1% steal in the
+    * first sweep (warmup spends CPU and iowait, never steal). Otherwise
+    * [[windowLabel]]. A first-rep outlier under iowait alone counts as
+    * warmup: a cold first scan at large scale runs at high iowait. */
   def runLabel(preSweepOtherLoad: Seq[Double], sweepOtherCores: Seq[Double],
                repsByQuery: Map[String, Seq[Double]],
                firstSweepStealPct: Double = -1.0): String =
@@ -285,18 +175,10 @@ object Bench {
       firstRepOutliers(repsByQuery).nonEmpty) "disturbed"
     else windowLabel(preSweepOtherLoad, sweepOtherCores)
 
-  // ---- host-speed canary (r20, VERDICT r19 #3): two consecutive rounds
-  // of UNIFORM artifact-to-artifact drift on unchanged code (sf0.1
-  // 14.1->23.4 s, sf10 52.7->64.3 s) were attributed to hypervisor
-  // shaving that the calm label cannot see — loadavg, busy-jiffies,
-  // iowait and steal all read near-zero while every row ran 1.2-1.9x
-  // slower. A fixed, deterministic, single-thread integer loop measured
-  // once per sweep gives the artifact an absolute CPU-speed reference:
-  // cross-round comparisons divide by the canary ratio (a slower canary
-  // = slower host, not a regression; tools/compare_bench.py does the
-  // arithmetic). xorshift64* is pure register arithmetic — no memory
-  // traffic, no allocation, immune to page cache and GC — so its
-  // ops/sec is a clean clock-speed proxy.
+  // Host-speed canary, one reading per sweep: a fixed single-thread
+  // xorshift64* loop (registers only, no allocation or memory traffic),
+  // so its ops/sec tracks clock speed. Cross-artifact comparisons divide
+  // by its ratio (tools/compare_bench.py).
   @volatile private var canarySink: Long = 0
   private[graft] def hostCanaryOpsPerSec(
       iters: Long = 400000000L): Double = {
@@ -315,15 +197,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // WAIT FOR CALM before the first sweep: a bench launched while a
-    // soak's load is still draining self-labels "loaded" and needs a
-    // re-run to adjudicate (it happened two rounds straight). Waiting
-    // out the residual load — up to SPARK_GRAFT_BENCH_CALM_WAIT_SECS
-    // (default 360 s, 0 disables) in 15 s steps until 1-min load < 2 —
-    // makes the artifact of record calm by construction; if the host
-    // never calms, the run proceeds and honestly labels itself loaded.
+    // wait, up to calmWait (0 disables), for a 1-min load under 2; a host
+    // that never calms still runs and labels itself loaded
     val calmWait =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_CALM_WAIT_SECS", "360").toInt
     var waited = 0
@@ -337,59 +213,7 @@ object Bench {
     // comma-separated subset filter for local A/B iterating (driver unset)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // Shuffle partitions default to the thread count (the sf0.1
-    // headline config, unchanged) but are OVERRIDABLE for big-SF runs:
-    // at sf100 (600M-row lineitem) 32 partitions put ~19M rows in every
-    // sort task and 32 concurrent tasks exhausted a 64g execution pool
-    // (q35 died UNABLE_TO_ACQUIRE_MEMORY) — partition count must scale
-    // with data, exactly as it would on a real cluster. AQE coalesces
-    // small partitions back, so oversizing costs little.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // r20 (guide §2.2/§6): two PARALLELISM FLOORS, both inert at scale
-    // and parameterized for it.
-    // - files.minPartitionNum floors SCAN parallelism at the core count:
-    //   at bench SF one 11 MB parquet file yields 3 x 128 MB-sized splits
-    //   and q01's whole scan+agg ran on 3 of 32 cores (measured 1.29 ->
-    //   1.08 s calm A/B; q21 0.74 -> 0.60). At 100 TB scans carry
-    //   thousands of splits and a floor of #cores is a no-op — this is
-    //   the knob's documented purpose, not a local-mode trick.
-    // - adaptive.coalescePartitions.minPartitionSize lowers AQE's 1 MB
-    //   coalesce floor: CPU-heavy kernel stages over FEW bytes (LSH
-    //   bucket collect + pair explode + verify: ~1.6 MB of shuffle at
-    //   sf0.1) coalesce to 1-2 tasks while 30 cores idle (measured p07
-    //   1.77 -> 1.42, p18 2.34 -> 1.72, p14 3.96 -> 3.04 in a worse
-    //   window). At scale the 64 MB advisory size governs long before
-    //   a 64k floor can matter; it only bites when a stage's total
-    //   bytes are under ~cores x 1 MB — exactly the case it fixes.
-    val scanMinPartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SCAN_MIN_PARTITIONS", cpus)
-    val aqeMinPartitionSize =
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k")
-    // r21 (guide §3.1, VERDICT r20 #3): let AQE rewrite a sort-merge
-    // join to a SHUFFLED HASH join when every post-shuffle partition's
-    // build side is under this threshold — skips both sort passes.
-    // Settled-plan evidence at 100x: q35's orders⋈peers and q02's
-    // co⋈liAgg flip SMJ→SHJ (plans/r21/*_shj_{off,on}.txt), calm-pair
-    // bench q35 0.89 / q02 0.86 vs a 0.93 joinless control. The gate is
-    // AQE's own runtime partition-size check, so it is self-inert
-    // wherever partitions exceed 64 MB (any properly-sized large-scale
-    // shuffle) — exactly the §3.1 "when its size conditions are met"
-    // rule, not a local-mode tune.
-    val shjLocalMapThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "64m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.files.minPartitionNum", scanMinPartitions)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        aqeMinPartitionSize)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        shjLocalMapThreshold)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     val queries = SparkEntry.queries
     val set = sys.env.get("SPARK_GRAFT_BENCH_SET") match {
@@ -409,23 +233,12 @@ object Bench {
       .withDefaultValue(Vector.empty)
     val loads = scala.collection.mutable.ArrayBuffer[Double]()
     val otherLoads = scala.collection.mutable.ArrayBuffer[Double]()
-    // r13: the calm label is a WHOLE-RUN claim, so EVERY sweep must
-    // start calm, not just the first (BENCH_r12 labeled itself calm,
-    // then absorbed a mid-run burst the judge had to re-adjudicate).
-    // Mid-run gating uses the SELF-CORRECTED other-load — the raw
-    // loadavg at a rep boundary mostly measures the bench's own just-
-    // finished sweep. A sweep that meets a genuine co-tenant burst
-    // waits it out from a shared, bounded budget; if the budget drains
-    // the run proceeds and the final label honestly degrades to
-    // "loaded".
+    // every sweep must start calm: a later sweep waits out co-tenant
+    // load from this shared budget, then runs and lets the label degrade
     var burstBudgetSecs =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BURST_BUDGET_SECS", "180").toInt
-    // r14: per-sweep JVM telemetry, so a monotone-increasing reps_detail
-    // is attributable FROM THE ARTIFACT (VERDICT r13 #5): rising gc_ms /
-    // heap_mb with own_cores ~ full = the bench's own memory pressure;
-    // flat GC with own_cores low and walls high = someone else has the
-    // machine (and loadavg_other should have caught it). gc_ms/own_cores
-    // are per-sweep DELTAS; heap_mb is used-heap at sweep end.
+    // per-sweep JVM telemetry: gc_ms and own_cores are deltas over the
+    // sweep, heap_mb is used heap at its end
     val gcBeans = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans
     def gcMillis(): Long = {
@@ -503,18 +316,6 @@ object Bench {
       else errors.reverse.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
         .mkString(""","errors":{""", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // "calm" = every sweep STARTED calm (pre-sweep other-load) AND RAN
-    // calm (per-sweep co-tenant CPU measured from /proc/stat counters —
-    // r15, so a burst the loadavg EWMA arithmetic erases is still
-    // caught). Unavailable readings (-1) never count as calm. All
-    // series ship in the artifact for audit; the rule itself is
-    // [[windowLabel]], unit-tested with the BENCH_r14 shape.
-    // (r18) the label additionally consumes the reps themselves: a >4x
-    // within-query spread marks the run "disturbed" and names the
-    // queries — the r17 artifact's 8x q01 stall ran under other_cores
-    // 0.0 (iowait/steal are invisible to busy-jiffy accounting), and
-    // the per-sweep iowait/steal percentages ship so the artifact can
-    // say which kind of stall a bad sweep met.
     val timesMap = times.toMap
     val firstSteal = stealPct.headOption.getOrElse(-1.0)
     val window =
@@ -526,9 +327,7 @@ object Bench {
       if (disturbed.isEmpty) ""
       else disturbed.map("\"" + _ + "\"")
         .mkString(""","disturbed":[""", ",", "]")
-    // first-rep outliers ALWAYS ship with the telemetry that adjudicated
-    // them (r19, ADVICE r18 #4): accepted-as-warmup is a decision a judge
-    // must be able to re-check from the artifact alone
+    // first-rep outliers always ship with the first sweep's telemetry
     val firstOutJson =
       if (firstOutliers.isEmpty) ""
       else firstOutliers.map { q =>
@@ -551,14 +350,9 @@ object Bench {
       .mkString("[", ",", "]")
     val jsonLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"set":"$setName","queries":$qs,"reps_detail":$detail,"loadavg":$loadJson,"loadavg_other":$otherJson,"jvm":$jvmJson,"host_canary_mops_per_sec":$canaryJson,"window":"$window"$disturbedJson$firstOutJson$errJson,"sf":"$sfDir"}"""
     println(jsonLine)
-    // VERDICT r20 #2: the driver's artifact parser read "parsed": null
-    // two rounds straight because sbt's logger prefixed the stdout line
-    // with "[info] ". Ship the SAME line as a FILE next to the repo root
-    // (cwd under `sbt run`) so the artifact survives any stdout framing;
-    // build.sbt additionally sets run/outputStrategy := StdoutOutput so
-    // the println above reaches stdout unprefixed. Path overridable for
-    // out-of-repo invocations; write failures are non-fatal (stdout
-    // remains the artifact of record).
+    // the same line as a file (SPARK_GRAFT_BENCH_JSON, default
+    // BENCH_LAST.json), so the artifact survives any stdout framing;
+    // a failed write is not fatal
     try {
       val out = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "BENCH_LAST.json"))

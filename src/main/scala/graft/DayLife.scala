@@ -54,17 +54,6 @@ object DayLife {
       .find(id => graft.routing.Sharding.shardOf(id, NumShards) == hopShard(i))
       .get
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = args.toList match {
     case "stage" :: root :: sfDir :: nB :: bSz :: Nil =>
       stage(root, sfDir, nB.toInt, bSz.toInt)
@@ -82,7 +71,7 @@ object DayLife {
     * drips them into `incoming/` at runtime. */
   private def stage(root: String, sfDir: String, nBatches: Int,
                     batchSize: Int): Unit = {
-    val s = session()
+    val s = Sessions.local()
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
@@ -162,7 +151,7 @@ object DayLife {
   }
 
   private def drive(root: String, sfDir: String): Unit = {
-    val s = session()
+    val s = Sessions.local()
     val conf = s.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
     val feedMs = sys.env.getOrElse("SPARK_GRAFT_DAY_FEED_MS", "8000").toLong
@@ -382,7 +371,7 @@ object DayLife {
   }
 
   private def verify(root: String, sfDir: String): Unit = {
-    val s = session()
+    val s = Sessions.local()
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     // entry heal, same as drive(): every driver is dead by the time the

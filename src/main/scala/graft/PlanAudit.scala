@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape audit over the gated queries: for each query (optionally
   * filtered by a substring arg), print one line with the physical
   * plan's exchange/sort counts and all-pairs-join flags — the numbers a
@@ -16,13 +14,7 @@ object PlanAudit {
     val filter = args.headOption.getOrElse("")
     val sfDir =
       if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(logLevel = "ERROR")
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(_.contains(filter))
     names.foreach { name =>
       try {

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan-evidence dumper for optimization rounds: writes
   * `.explain("formatted")` for each named query — plus the SETTLED
@@ -10,8 +9,7 @@ import org.apache.spark.sql.SparkSession
   * `<outDir>/<name>_<suffix>.txt`.
   *
   * Usage: graft.PlanDump <outDir> <suffix> [names,csv] [sfDir]
-  * Session config mirrors Bench (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus) so the dumped plans are the benched plans.
+  * Runs under [[Sessions.local]], so the dumped plans are the benched plans.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,21 +18,7 @@ object PlanDump {
     val only = if (args.length > 2 && args(2).nonEmpty)
       args(2).split(",").map(_.trim).toSeq else Nil
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_MIN_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(logLevel = "ERROR")
     Files.createDirectories(Paths.get(outDir))
     val qs = SparkEntry.queries
     val names = if (only.nonEmpty) only else qs.keys.toSeq.sorted

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage profiler for one declared query (guide §1: measure first).
   * Runs the query through the noop sink `reps` times and prints, for the
@@ -10,28 +9,14 @@ import org.apache.spark.sql.SparkSession
   * scan-, shuffle- or overhead-bound without the Spark UI.
   *
   * Usage: graft.Profile <queryName> [sfDir] [reps]
-  * Session config mirrors Bench (local[$SPARK_GRAFT_CPUS]).
+  * Runs under [[Sessions.local]], the bench's session.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_MIN_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(logLevel = "ERROR")
 
     @volatile var record = false
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()

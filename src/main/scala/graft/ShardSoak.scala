@@ -87,16 +87,11 @@ object ShardSoak {
     app
   }
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** A driver's session: `SPARK_GRAFT_SOAK_CPUS` task slots, so several
+    * drivers can share one host; else the [[Sessions]] default. */
+  private def driverSession(): SparkSession = Sessions.local(
+    sys.env.get("SPARK_GRAFT_SOAK_CPUS").map(_.trim.toInt)
+      .getOrElse(Sessions.cpus(sys.env)))
 
   private def log(root: String, driverId: String, msg: String): Unit = {
     val out = new java.io.FileWriter(
@@ -109,7 +104,7 @@ object ShardSoak {
     case "stage" =>
       val Array(_, root, sfDir, copiesS) = args
       val copies = copiesS.toInt
-      val spark = session(16)
+      val spark = Sessions.local()
       val base = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val corpus = base.crossJoin(spark.range(copies.toLong).toDF("copy"))
@@ -139,7 +134,6 @@ object ShardSoak {
 
     case "drive" =>
       val Array(_, root, driverId, shardsCsv) = args
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_SOAK_CPUS", "12").toInt
       val timeoutMs =
         sys.env.getOrElse("SPARK_GRAFT_SHARD_SOAK_TIMEOUT", "600").toLong * 1000
       // SPARK_GRAFT_KV_BACKEND=http: all shared state (leases AND WAL
@@ -167,7 +161,7 @@ object ShardSoak {
           else raw)
         } else None
       val kvGc = sys.env.getOrElse("SPARK_GRAFT_KV_GROUP_COMMIT", "64").toInt
-      val spark = session(cpus)
+      val spark = driverSession()
       val app = buildApp(spark, root)
       val home = shardsCsv.split(",").filter(_.nonEmpty).map(_.toInt).toSet
       // start barrier FIRST: leases are heartbeat by shardedCycle, so a
@@ -223,7 +217,7 @@ object ShardSoak {
 
     case "verify" =>
       val Array(_, root) = args
-      val spark = session(16)
+      val spark = Sessions.local()
       val corpus = spark.read.parquet(s"$root/staged/0")
       val exp = corpus.agg(
         count(lit(1)).as("docs"),
@@ -272,7 +266,7 @@ object ShardSoak {
       val gc = sys.env.getOrElse("SPARK_GRAFT_KV_GROUP_COMMIT", "64").toInt
       val timeoutMs =
         sys.env.getOrElse("SPARK_GRAFT_SHARD_SOAK_TIMEOUT", "600").toLong * 1000
-      val spark = session(sys.env.getOrElse("SPARK_GRAFT_SOAK_CPUS", "16").toInt)
+      val spark = driverSession()
       val t0 = System.nanoTime()
       val base = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"))

@@ -32,17 +32,6 @@ object StreamSoak {
   private val MinJ = 0.9
   private val MaxBucket = 1000
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = args.toList match {
     case "stage" :: root :: sfDir :: nB :: bSz :: Nil =>
       stage(root, sfDir, nB.toInt, bSz.toInt)
@@ -83,7 +72,7 @@ object StreamSoak {
 
   private def stage(root: String, sfDir: String, nBatches: Int,
                     batchSize: Int): Unit = {
-    val s = session()
+    val s = Sessions.local()
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
@@ -108,7 +97,7 @@ object StreamSoak {
   }
 
   private def drive(root: String): Unit = {
-    val s = session()
+    val s = Sessions.local()
     s.streams.addListener(
       new org.apache.spark.sql.streaming.StreamingQueryListener {
         import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -140,7 +129,7 @@ object StreamSoak {
   }
 
   private def verify(root: String, sfDir: String): Unit = {
-    val s = session()
+    val s = Sessions.local()
     val base = corpus(s, sfDir).diskCheckpoint()
     val nBase = base.count()
     // probe: fresh near-dups of corpus docs — must flag identically

@@ -1685,9 +1685,6 @@ final class Application(val name: String, val spark: SparkSession,
   private def findRoute(id: String): Option[graft.routing.Route] =
     runtimeTables.flatMap(_.find(id)).headOption
 
-  private def slotsOf(routeId: String): Seq[Slot] =
-    defs.find(_.id == routeId).map(_.slots).getOrElse(Nil)
-
   // ---- runtime ----------------------------------------------------------
 
   /** Inject one concrete event signal; runs every ready node synchronously

@@ -52,11 +52,4 @@ object AtomicFile {
         }
     attempt(dest).orElse(attempt(tmpFor(dest)))
   }
-
-  /** The live path to read: dest if present, else a surviving tmp. Prefer
-    * [[read]], which also recovers from torn writes. */
-  def readPath(fs: FileSystem, dest: Path): Option[Path] = {
-    if (fs.exists(dest)) Some(dest)
-    else { val t = tmpFor(dest); if (fs.exists(t)) Some(t) else None }
-  }
 }

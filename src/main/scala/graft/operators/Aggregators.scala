@@ -1,51 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
-
-/** One-pass MinHash signature as a typed `Aggregator`: a single buffer of
-  * k longs per document vs. k separate min() aggregate columns. At scale
-  * this keeps the partial-aggregation row narrow and the codegen graph
-  * small (64 aggregate expressions blow up the generated method size).
-  *
-  * Hash family: two murmur32 draws composed to 64 bits, salted per
-  * position — deterministic across executors, independent of Spark's
-  * expression hash so the aggregator is self-consistent standalone.
-  */
-final class MinHashAggregator(k: Int)
-    extends Aggregator[String, Array[Long], Array[Long]] {
-
-  override def zero: Array[Long] = Array.fill(k)(Long.MaxValue)
-
-  override def reduce(buf: Array[Long], shingle: String): Array[Long] = {
-    // double-hashing: two murmur draws, k cheap combinations — not 2k
-    // string hashes per shingle
-    val a = scala.util.hashing.MurmurHash3.stringHash(shingle, 0x9747b28c).toLong
-    val b = scala.util.hashing.MurmurHash3.stringHash(shingle, 0x85ebca6b).toLong
-    val h1 = (a << 32) | (b & 0xffffffffL)
-    val h2 = (b << 32) | (a & 0xffffffffL) | 1L // odd step, full-period mod 2^64
-    var i = 0
-    while (i < k) {
-      val h = h1 + i.toLong * h2
-      if (h < buf(i)) buf(i) = h
-      i += 1
-    }
-    buf
-  }
-
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < k) { if (b2(i) < b1(i)) b1(i) = b2(i); i += 1 }
-    b1
-  }
-
-  override def finish(buf: Array[Long]): Array[Long] = buf
-  override def bufferEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-}
 
 /** `collect_list` with a hard cap on the AGGREGATION BUFFER: keeps at
   * most `cap + 1` elements, so a group that overflows surfaces with
@@ -184,16 +140,4 @@ final class VecSumCount
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
   override def outputEncoder: Encoder[Seq[Double]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-}
-
-object MinHashAggregator {
-  /** Aggregator-based variant of Dedup.minhashSignatures: same output
-    * shape (idCol, sig array<bigint>), one buffer instead of k columns. */
-  def signatures(df: DataFrame, textCol: String, idCol: String,
-                 k: Int = 64, shingleN: Int = 3): DataFrame = {
-    val mh = udaf(new MinHashAggregator(k), Encoders.STRING)
-    df.select(col(idCol), explode(Dedup.shingles(col(textCol), shingleN)).as("g"))
-      .groupBy(col(idCol))
-      .agg(mh(col("g")).as("sig"))
-  }
 }

@@ -82,17 +82,6 @@ object Dedup {
     df.groupBy(contentKey(md5(col(textCol)), idCol).as("text_hash"))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_cnt"))
 
-  /** Exact dedup on normalized content (case/whitespace-insensitive).
-    * Normalization collapses FIRST and trims LAST: SQL trim strips
-    * spaces only, so trimming first left a tab/newline at either edge
-    * to survive as a residual " " — "foo\n" and "foo" hashed apart
-    * despite the whitespace-insensitive contract. */
-  def exactDedupNormalized(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.withColumn("__norm",
-        trim(regexp_replace(lower(col(textCol)), "\\s+", " ")))
-      .groupBy(contentKey(md5(col("__norm")), idCol).as("text_hash"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_cnt"))
-
   /** Word n-gram (shingle) SET for set-Jaccard: the shared sliding window
     * ([[TextFunctions.wordNgrams]] — one expression, no drifted copies;
     * same empty-array guard for docs shorter than n) deduplicated. */
@@ -302,29 +291,6 @@ object Dedup {
       // keep that degenerate-input behavior
       .where(col("d1") =!= col("d2"))
       .distinct()
-  }
-
-  /** Diagnostic face of the quadratic-bucket guard: the LSH bucket-size
-    * distribution and what `maxBucketSize` drops — total buckets, the
-    * largest one, dropped-bucket count, and the candidate pairs those
-    * drops avoided (each m-bucket would emit m(m-1)/2 pairs). Run this in
-    * scale soaks to prove the guard engages before a near-universal
-    * bucket (shared boilerplate) turns the candidate join quadratic. */
-  def lshBucketStats(df: DataFrame, textCol: String, idCol: String,
-                     k: Int = 64, bands: Int = 16, shingleN: Int = 3,
-                     maxBucketSize: Int = 1000): DataFrame = {
-    // shingleN default tracks minhashLshPairs — the diagnostic must
-    // describe the SAME clustering the operator will bucket
-    require(k % bands == 0, "bands must divide k")
-    val sigs = minhashSignatures(df, textCol, idCol, k, shingleN)
-    bandExplode(sigs, idCol, bands, k / bands)
-      .groupBy("band", "band_hash").agg(count(lit(1)).as("sz"))
-      .agg(count(lit(1)).as("buckets"),
-        max(col("sz")).as("max_bucket"),
-        sum(when(col("sz") > maxBucketSize, 1).otherwise(0)).as("dropped_buckets"),
-        sum(when(col("sz") > maxBucketSize,
-          (col("sz") * (col("sz") - 1) / 2).cast("long")).otherwise(0L))
-          .as("pairs_avoided"))
   }
 
   def minhashLshPairs(df: DataFrame, textCol: String, idCol: String,
@@ -1313,20 +1279,18 @@ object Dedup {
         col("span_tokens"))
   }
 
-  /** Diagnostic face of [[maximalSharedSpans]]' gram-frequency cap
-    * (VERDICT r18: this was the one dedup-family guard whose drops were
-    * invisible — its sibling [[ngramJaccardPairs]] refuses loudly on the
-    * same breach, and [[lshBucketStats]] is the pattern this mirrors).
-    * One row describing the width-`minSpanTokens` gram occurrence
-    * distribution and what `maxGramOccurrences` silently drops:
+  /** Diagnostic face of [[maximalSharedSpans]]' gram-frequency cap,
+    * whose drops are otherwise silent (its sibling [[ngramJaccardPairs]]
+    * refuses loudly on the same breach). One row describing the
+    * width-`minSpanTokens` gram occurrence distribution and what
+    * `maxGramOccurrences` silently drops:
     * distinct grams, the most frequent gram's count, dropped-gram
     * count, the diagonal seed pairs those drops avoided (each
     * c-occurrence gram would emit c(c−1)/2), and the number of
     * DOCUMENTS containing at least one dropped gram — each such doc is
     * the only place the documented at-worst harm ("a dropped gram can
     * split a span that contains it") can occur, so docs_affected = 0
-    * proves a spans run was drop-free. Run alongside scale soaks the
-    * way lshBucketStats runs for the LSH family. */
+    * proves a spans run was drop-free. */
   def sharedSpanGramStats(df: DataFrame, textCol: String, idCol: String,
                           minSpanTokens: Int = 50,
                           maxGramOccurrences: Int = 1000): DataFrame = {
@@ -1421,7 +1385,7 @@ object Dedup {
 
   /** One-row cell-size distribution of a spherical-k-means clustering and
     * what `maxCellSize` would drop — the diagnostic face of the semantic-
-    * dedup quadratic guard, mirroring [[lshBucketStats]]: k, cell count,
+    * dedup quadratic guard: k, cell count,
     * the largest cell, multi-row cells, dropped cells, and the cosine
     * pairs those drops avoided (each m-cell would emit m(m-1)/2). */
   def semanticCellStats(df: DataFrame, vecCol: String, idCol: String,

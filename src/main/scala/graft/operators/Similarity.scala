@@ -635,11 +635,6 @@ object Similarity {
     finally { hb.close(); FsClaim.release(fs, claim, uuid) }
   }
 
-  /** Heal an interrupted [[compactAnnIndex]] swap; true when healed. */
-  def healAnnIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Boolean =
-    graft.compute.Compaction.healDir(spark, s"$path/sigs")
-
   /** Heal an interrupted [[compactAnnIndexKv]] swap. */
   def healAnnIndexKv(spark: org.apache.spark.sql.SparkSession, path: String,
                      kv: graft.routing.ConditionalKv): Boolean =

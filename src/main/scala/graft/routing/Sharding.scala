@@ -139,8 +139,8 @@ final class InMemoryConditionalKv extends ConditionalKv {
 }
 
 /** [[ConditionalKv]] decorator that sleeps `latencyMs` before every
-  * store round-trip — the object-store stand-in for throughput ledgers
-  * (CkptBench) and endurance soaks: an S3-class PUT/GET/LIST is a
+  * store round-trip — the object-store stand-in for endurance soaks
+  * (`graft.ShardSoak`): an S3-class PUT/GET/LIST is a
   * 20-50 ms HTTP round-trip, and designs that are fine on the in-memory
   * backend (one PUT per WAL record) collapse under it. */
 final class LatencyInjectedKv(underlying: ConditionalKv, latencyMs: Long)

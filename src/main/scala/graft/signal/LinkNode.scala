@@ -76,7 +76,6 @@ final case class SignalLinkNode(
     "all inputs cannot be reference/nearest (nothing would ever trigger)")
 
   def signal(alias: String): Option[Signal] = signals.find(_.alias == alias)
-  def independentSignals: List[Signal] = signals.filterNot(_.isReference)
 
   /** Auto-link same-named dims across every signal pair that doesn't already
     * have a link (reference compensate_missing_links, signal.py:1341-1410). */

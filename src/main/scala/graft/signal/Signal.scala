@@ -53,12 +53,6 @@ final case class Signal(
     if (idx < 0) None else tip.lift(idx)
   }
 
-  /** All values a named dimension takes across the materialized range. */
-  def valuesOf(dimName: String): List[DimValue] = {
-    val idx = dimIndex(dimName)
-    if (idx < 0) Nil else filter.tuples.flatMap(_.lift(idx)).distinct
-  }
-
   /** Dimension-less signals (lookup datasets) are trivially materialized. */
   def isMaterialized: Boolean =
     if (spec.flatten.isEmpty) true else !filter.isEmpty && filter.isMaterialized

@@ -166,25 +166,6 @@ class ScaleSuite extends AnyFunSuite with BeforeAndAfterAll {
       .sameElements(idx.topK(base.toSeq, 1, probeBits = 2).collect().map(_.getLong(0))))
   }
 
-  test("one-pass MinHash aggregator matches column-based signature semantics") {
-    val sp = spark
-    import sp.implicits._
-    val docs = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog"),
-      (1L, "the quick brown fox jumps over the lazy dog"), // exact dup
-      (2L, "completely different words entirely here now")
-    ).toDF("doc_id", "text")
-    val sigs = MinHashAggregator.signatures(docs, "text", "doc_id", k = 32, shingleN = 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(sigs(0L) == sigs(1L)) // identical docs, identical signatures
-    assert(sigs(0L) != sigs(2L))
-    assert(sigs(0L).length == 32)
-    // deterministic across evaluations
-    val again = MinHashAggregator.signatures(docs, "text", "doc_id", k = 32, shingleN = 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(again == sigs)
-  }
-
   test("token budget at partitions=4096 stays analyzable (broadcast offsets)") {
     val sp = spark; import sp.implicits._
     // the historical when-chain folded one branch PER PARTITION into a
