@@ -1,7 +1,11 @@
 package graft.compute
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.routing.{ExecutionContext, PathProbe}
@@ -101,24 +105,27 @@ object InputLoader {
     p
   }
 
-  /** Probe every path concurrently, preserving input order in the
-    * result. Exceptions propagate (same contract as the serial probe —
+  /** Apply `f` to every path concurrently, preserving input order in
+    * the result. Exceptions propagate (same contract as a serial loop —
     * a broken store must fail the execution, not skip its partitions). */
-  private def probeAll(paths: Seq[String],
-                       complete: String => Boolean): Seq[(String, Boolean)] =
-    if (paths.size <= 1) paths.map(p => p -> complete(p))
+  private def parMap[A](paths: Seq[String])(f: String => A): Seq[A] =
+    if (paths.size <= 1) paths.map(f)
     else {
       val futs = paths.map { p =>
-        p -> probePool.submit(new java.util.concurrent.Callable[Boolean] {
-          def call(): Boolean = complete(p)
+        probePool.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = f(p)
         })
       }
-      futs.map { case (p, f) =>
-        try p -> f.get().booleanValue()
+      futs.map { fut =>
+        try fut.get()
         catch { case e: java.util.concurrent.ExecutionException =>
           throw e.getCause }
       }
     }
+
+  private def probeAll(paths: Seq[String],
+                       complete: String => Boolean): Seq[(String, Boolean)] =
+    paths.zip(parMap(paths)(complete))
 
   def load(spark: SparkSession, signal: Signal, probe: PathProbe): DataFrame = {
     if (signal.source.kind == SignalSourceKind.CATALOG) return loadCatalog(spark, signal)
@@ -172,35 +179,14 @@ object InputLoader {
           signal.source.kind != SignalSourceKind.INTERNAL) None
       else chosen.headOption.flatMap { p =>
         // the schema marker lives at the PARTITION root (OutputWriter),
-        // not under dataFolder
+        // not under dataFolder; one open, no exists probe first
         val f = new Path(p, "_SCHEMA.spark.json")
         val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(f)) None
-        else {
+        try {
           val in = fs.open(f)
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val chunk = new Array[Byte](8192)
-            var n = in.read(chunk)
-            while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-            Some(buf.toString("UTF-8"))
-          } finally in.close()
-        }
+          try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+        } catch { case _: java.io.FileNotFoundException => None }
       }
-    val effectiveSchema = attrs.schemaJson.orElse(persistedSchema)
-
-    var reader = spark.read.format(attrs.format)
-    if (attrs.format.equalsIgnoreCase("csv"))
-      reader = reader.option("header", attrs.header.toString).option("sep", attrs.delimiter)
-        .option("inferSchema", effectiveSchema.isEmpty.toString)
-    // charset of text formats (reference `encoding` attr,
-    // signal_source.py:483-484); Spark's csv/json/text readers share the
-    // `encoding` option name
-    if (Seq("csv", "json", "text").exists(attrs.format.equalsIgnoreCase))
-      attrs.encoding.foreach(e => reader = reader.option("encoding", e))
-    effectiveSchema.foreach { js =>
-      reader = reader.schema(DataType.fromJson(js).asInstanceOf[StructType])
-    }
     // a FileCheck marker that does NOT start with '_'/'.' (a vendor
     // `manifest.json`) is listed by Spark as DATA and breaks footer
     // reads/schema inference — expand those partitions to explicit file
@@ -228,7 +214,80 @@ object InputLoader {
     require(loadTargets.nonEmpty,
       s"no data files for input '${signal.alias}' after excluding " +
         s"completion markers ${vendorMarkers.mkString(", ")}")
+
+    // declared, else persisted; else, for parquet, the footer Spark's
+    // inference would read, read on the driver instead of in a one-task
+    // Spark job
+    val effectiveSchema: Option[StructType] = attrs.schemaJson
+      .orElse(persistedSchema)
+      .map(js => DataType.fromJson(js).asInstanceOf[StructType])
+      .orElse(
+        if (attrs.format.equalsIgnoreCase("parquet") && vendorMarkers.isEmpty)
+          parquetFooterSchema(spark, loadTargets)
+        else None)
+
+    var reader = spark.read.format(attrs.format)
+    if (attrs.format.equalsIgnoreCase("csv"))
+      reader = reader.option("header", attrs.header.toString).option("sep", attrs.delimiter)
+        .option("inferSchema", effectiveSchema.isEmpty.toString)
+    // charset of text formats (reference `encoding` attr,
+    // signal_source.py:483-484); Spark's csv/json/text readers share the
+    // `encoding` option name
+    if (Seq("csv", "json", "text").exists(attrs.format.equalsIgnoreCase))
+      attrs.encoding.foreach(e => reader = reader.option("encoding", e))
+    effectiveSchema.foreach(st => reader = reader.schema(st))
     reader.load(loadTargets: _*)
+  }
+
+  /** The schema Spark's own (non-merging) parquet inference would give
+    * `targets`, read on the driver. Spark lists the targets, drops names
+    * starting with `_` (unless they hold `=`) or `.`, sorts the remaining
+    * leaf files by path and converts the FIRST one's footer: its
+    * `org.apache.spark.sql.parquet.row.metadata` schema when present,
+    * else the parquet message type. This lists every target (one
+    * listStatus each, concurrently) and does the same on that file with
+    * the converter flags Spark's schema job uses.
+    *
+    * None — Spark infers as before — wherever the choice could differ
+    * or the read fails: schema merging on, a glob target, a visible
+    * sub-directory (its files join the sort, and partition discovery
+    * starts), a `_metadata`/`_common_metadata` summary file, no data
+    * file at all, or any listing/footer/conversion error (Spark then
+    * raises its own). */
+  private[compute] def parquetFooterSchema(spark: SparkSession,
+                                           targets: Seq[String]): Option[StructType] = {
+    val sqlConf = spark.sessionState.conf
+    // a glob pattern is expanded by Spark, not listed
+    if (sqlConf.isParquetSchemaMergingEnabled ||
+        targets.exists(_.exists("{}[]*?\\".contains(_)))) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    def hidden(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+    def summary(n: String) =
+      n.startsWith("_metadata") || n.startsWith("_common_metadata")
+    try {
+      val listed: Seq[FileStatus] = parMap(targets) { t =>
+        val p = new Path(t)
+        p.getFileSystem(hadoopConf).listStatus(p).toSeq
+      }.flatten
+      val visible = listed.filterNot(st => hidden(st.getPath.getName))
+      if (listed.exists(st => summary(st.getPath.getName)) ||
+          visible.exists(_.isDirectory)) None
+      else visible.minByOption(_.getPath.toString).map { st =>
+        val footer = new Footer(st.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, hadoopConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        ParquetFileFormat.readSchemaFromFooter(footer,
+          new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = sqlConf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation =
+              sqlConf.parquetReaderRespectUnknownTypeAnnotation))
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** S2: catalog scan with partition pushdown — the EXACT materialized
@@ -529,14 +588,20 @@ final class LocalSparkCompute(spark: SparkSession, probe: PathProbe,
              | SignalSourceKind.ALARM => false
         case _ => true
       }))
-    // EVERY execution gets its own isolated session (shared SparkContext,
-    // fresh temp-view catalog): on the shared session, concurrent
+    // EVERY execution gets its own session: temp views are isolated,
+    // compiled code is shared. Views: on a shared session, concurrent
     // executeAsync runs raced createOrReplaceTempView — node B's input0
     // silently replaced node A's mid-flight — and views leaked across
     // executions, resolving stale data instead of failing. Persistent
     // catalog tables (saveAsTable) remain visible; session-level conf
-    // set at builder time is carried by the shared SparkConf.
+    // set at builder time is carried by the shared SparkConf. Code:
+    // Spark keys its whole-stage codegen cache on (context classloader,
+    // source); with artifact isolation on, each session's tasks run under
+    // a classloader of their own and every execution would recompile
+    // every class. Isolation is off because graft adds no artifacts to
+    // any session; it must be set before the session's first use.
     val session = spark.newSession()
+    session.conf.set("spark.sql.artifact.isolation.enabled", "false")
     // load ONCE per signal, positionally: keying the loads by alias
     // collapsed duplicate-alias inputs (the same upstream consumed twice
     // with different ranges) onto the LAST load — input0/input1 and
