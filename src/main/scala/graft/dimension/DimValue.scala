@@ -112,28 +112,82 @@ object DimValue {
     "%Y" -> "yyyy", "%y" -> "yy", "%m" -> "MM", "%d" -> "dd",
     "%H" -> "HH", "%M" -> "mm", "%S" -> "ss", "%j" -> "DDD")
 
+  /** Every non-directive character is literal, so each run of them is
+    * emitted as ONE quoted section (a quote inside doubled): java.time
+    * reads letters as fields, `[ ] { } #` as syntax, and two adjacent
+    * single-character quotes ('d''t') as an escaped quote. */
   def strftimeToJava(fmt: String): String = {
-    // quote literal runs so e.g. '-' 'T' pass through untouched
     val sb = new StringBuilder
+    val lit = new StringBuilder
+    def flushLiteral(): Unit = if (lit.nonEmpty) {
+      sb.append('\'').append(lit.toString.replace("'", "''")).append('\'')
+      lit.clear()
+    }
     var i = 0
     while (i < fmt.length) {
       if (fmt.charAt(i) == '%' && i + 1 < fmt.length) {
         val d = fmt.substring(i, i + 2)
         strftimeMap.find(_._1 == d) match {
-          case Some((_, j)) => sb.append(j); i += 2
-          case None => sb.append('\'').append(fmt.charAt(i + 1)).append('\''); i += 2
+          case Some((_, j)) => flushLiteral(); sb.append(j)
+          case None => lit.append(fmt.charAt(i + 1)) // %% and unknown: literal
         }
+        i += 2
       } else {
-        val c = fmt.charAt(i)
-        if (c.isLetter) sb.append('\'').append(c).append('\'') else sb.append(c)
+        lit.append(fmt.charAt(i))
         i += 1
       }
     }
+    flushLiteral()
     sb.toString
   }
 
+  /** One compiled formatter per strftime string, shared process-wide:
+    * DateTimeFormatter is immutable and thread-safe, and the keys are the
+    * formats dimension specs declare, so the map stays small. Compiling
+    * on every DateValue construction, copy and match would dominate the
+    * router's per-event cost.
+    * A format java.time rejects throws from here on every call —
+    * computeIfAbsent caches nothing when the mapping throws. */
+  private val formatters =
+    new java.util.concurrent.ConcurrentHashMap[String, DateTimeFormatter]()
+
   def formatterFor(fmt: String): DateTimeFormatter =
-    DateTimeFormatter.ofPattern(strftimeToJava(fmt))
+    formatters.computeIfAbsent(fmt, f => DateTimeFormatter.ofPattern(strftimeToJava(f)))
+
+  /** The parse side of a declared format: `lenient` defaults the
+    * time-of-day fields to 0, so partial formats (e.g. "%Y-%m-%d %H")
+    * keep the fields they DO declare instead of being degraded to a
+    * date-only parse that drops the hour; `strict` is the plain pattern,
+    * for date-only values. Cached like [[formatterFor]]. */
+  private final class ParseFormats(val lenient: DateTimeFormatter,
+                                   val strict: DateTimeFormatter)
+  private val parseFormats =
+    new java.util.concurrent.ConcurrentHashMap[String, ParseFormats]()
+
+  private def parseFormatsFor(fmt: String): ParseFormats =
+    parseFormats.computeIfAbsent(fmt, f => new ParseFormats(
+      new java.time.format.DateTimeFormatterBuilder()
+        .appendPattern(strftimeToJava(f))
+        .parseDefaulting(java.time.temporal.ChronoField.HOUR_OF_DAY, 0)
+        .parseDefaulting(java.time.temporal.ChronoField.MINUTE_OF_HOUR, 0)
+        .parseDefaulting(java.time.temporal.ChronoField.SECOND_OF_MINUTE, 0)
+        .toFormatter,
+      formatterFor(f)))
+
+  /** Unambiguous common forms for untyped values (the reference's
+    * separators + the breadth of dateutil's defaults that stays
+    * order-unambiguous: ISO variants with sub-second/minute precision,
+    * month-name forms, compact digits), in trial order. */
+  private val commonFormats: List[DateTimeFormatter] = List(
+    "yyyy-MM-dd'T'HH:mm:ss.SSS", "yyyy-MM-dd'T'HH:mm:ss",
+    "yyyy-MM-dd'T'HH:mm", "yyyy-MM-dd HH:mm:ss.SSS",
+    "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd HH:mm",
+    "yyyy-MM-dd-HH", "yyyy-MM-dd_HH", "yyyy-MM-dd@HH", "yyyy-MM-dd/HH",
+    "yyyy/MM/dd HH:mm:ss", "yyyy/MM/dd", "yyyy.MM.dd", "yyyy-MM-dd",
+    "yyyyMMddHHmm", "yyyyMMddHH", "yyyyMMdd",
+    "MMM d yyyy", "d MMM yyyy", "MMMM d, yyyy", "MMMM d yyyy",
+    "d MMMM yyyy", "MMM d, yyyy")
+    .map(DateTimeFormatter.ofPattern(_, java.util.Locale.ENGLISH))
 
   /** Pragmatic stand-in for the reference's fuzzy datetime parsing
     * (dimension_constructs.py:1523-1568): ISO-ish forms with the reference's
@@ -142,43 +196,20 @@ object DimValue {
   def parseDateTime(s: String, format: Option[String]): Option[LocalDateTime] = {
     val t = s.trim
     def viaFormat: Option[LocalDateTime] = format.flatMap { f =>
-      val jf = strftimeToJava(f)
-      // time-of-day fields default to 0 so partial formats (e.g.
-      // "%Y-%m-%d %H") keep the fields they DO declare instead of being
-      // degraded to a date-only parse that drops the hour
-      def lenient = new java.time.format.DateTimeFormatterBuilder()
-        .appendPattern(jf)
-        .parseDefaulting(java.time.temporal.ChronoField.HOUR_OF_DAY, 0)
-        .parseDefaulting(java.time.temporal.ChronoField.MINUTE_OF_HOUR, 0)
-        .parseDefaulting(java.time.temporal.ChronoField.SECOND_OF_MINUTE, 0)
-        .toFormatter
-      Try(LocalDateTime.parse(t, lenient)).toOption
-        .orElse(Try(LocalDate.parse(t, DateTimeFormatter.ofPattern(jf)).atStartOfDay()).toOption)
-        .orElse( // hour-only / partial formats, e.g. "%H" with value "23"
-          if (f == "%H") Try(LocalDateTime.of(1900, 1, 1, t.toInt, 0)).toOption
-          else if (f == "%m") Try(LocalDateTime.of(1900, t.toInt, 1, 0, 0)).toOption
-          else if (f == "%d") Try(LocalDateTime.of(1900, 1, t.toInt, 0, 0)).toOption
-          else None)
+      Try(parseFormatsFor(f)).toOption.flatMap { pf =>
+        Try(LocalDateTime.parse(t, pf.lenient)).toOption
+          .orElse(Try(LocalDate.parse(t, pf.strict).atStartOfDay()).toOption)
+      }.orElse( // hour-only / partial formats, e.g. "%H" with value "23"
+        if (f == "%H") Try(LocalDateTime.of(1900, 1, 1, t.toInt, 0)).toOption
+        else if (f == "%m") Try(LocalDateTime.of(1900, t.toInt, 1, 0, 0)).toOption
+        else if (f == "%d") Try(LocalDateTime.of(1900, 1, t.toInt, 0, 0)).toOption
+        else None)
     }
-    def viaCommon: Option[LocalDateTime] = {
-      // unambiguous common forms (the reference's separators + the breadth
-      // of dateutil's defaults that stays order-unambiguous: ISO variants
-      // with sub-second/minute precision, month-name forms, compact digits)
-      val candidates = List(
-        "yyyy-MM-dd'T'HH:mm:ss.SSS", "yyyy-MM-dd'T'HH:mm:ss",
-        "yyyy-MM-dd'T'HH:mm", "yyyy-MM-dd HH:mm:ss.SSS",
-        "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd HH:mm",
-        "yyyy-MM-dd-HH", "yyyy-MM-dd_HH", "yyyy-MM-dd@HH", "yyyy-MM-dd/HH",
-        "yyyy/MM/dd HH:mm:ss", "yyyy/MM/dd", "yyyy.MM.dd", "yyyy-MM-dd",
-        "yyyyMMddHHmm", "yyyyMMddHH", "yyyyMMdd",
-        "MMM d yyyy", "d MMM yyyy", "MMMM d, yyyy", "MMMM d yyyy",
-        "d MMMM yyyy", "MMM d, yyyy")
-      candidates.view.flatMap { p =>
-        val fmt = DateTimeFormatter.ofPattern(p, java.util.Locale.ENGLISH)
+    def viaCommon: Option[LocalDateTime] =
+      commonFormats.view.flatMap { fmt =>
         Try(LocalDateTime.parse(t, fmt)).toOption
           .orElse(Try(LocalDate.parse(t, fmt).atStartOfDay()).toOption)
       }.headOption
-    }
     // a declared format is authoritative: "%Y-%d-%m" on "2024-05-03" must
     // parse as Mar 5, not the generic ISO reading (May 3)
     viaFormat.orElse(viaCommon)
@@ -380,7 +411,9 @@ final case class DateValue(date: LocalDateTime, name: Option[String] = None,
       // naive comparisons must NOT be consulted as a fallback
       if (timezone.isDefined && d.timezone.isDefined) instant == d.instant
       else value == d.value || date == d.date ||
-        format.exists(f => value == d.date.format(DimValue.formatterFor(f)))
+        // d's date in OUR format; under the same format that is d.value
+        format.exists(f => !d.format.contains(f) &&
+          value == d.date.format(DimValue.formatterFor(f)))
     case _ => false
   }
 

@@ -191,6 +191,12 @@ final class Route(
   * equivalent of the reference's RoutingTable + RouteIndex
   * (constructs.py:2685-2741, 3293-3433); the per-route DynamoDB lock is a
   * plain object monitor here.
+  *
+  * @param compactEveryEvents the floor N of the live-compaction trigger:
+  *   the WAL is folded once the events appended since the last fold reach
+  *   max(N, event paths that fold kept), so the log stays ≤ 2 × live
+  *   paths + N event lines and appends cost amortized O(1). While live
+  *   paths stay under N, this is a fold every N events.
   */
 final class RoutingTable(probe: PathProbe,
                          checkpoint: Option[RoutingWal] = None,
@@ -199,6 +205,8 @@ final class RoutingTable(probe: PathProbe,
   private var routes: List[Route] = Nil
   private var replaying = false
   private var eventsSinceCompact = 0
+  /** Distinct event paths the last fold wrote (see [[maybeCompact]]). */
+  private var eventPathsKept = 0
 
   // ---- event→route index (reference RouteIndex, constructs.py:
   // 2705-2741): both dispatch paths were linear scans over every
@@ -271,19 +279,30 @@ final class RoutingTable(probe: PathProbe,
       matching.flatMap(_.receive(incoming, cachingProbe, isBlocked = isBlocked))
     }
 
-  /** Periodic live compaction: recovery-time-only compaction let the log
-    * grow unboundedly between restarts of a long-lived driver. Every
-    * `compactEveryEvents` appended events, fold the log to
-    * last-occurrence-per-path + distinct completed set — O(log) work
-    * amortized over N O(1) appends. */
+  /** Live compaction, so the log stays bounded between restarts of a
+    * long-lived driver. Geometric (the size-ratio merge policy of
+    * log-structured stores): fold the log to last-occurrence-per-path +
+    * distinct completed set once the events appended since the last fold
+    * reach max(`compactEveryEvents`, event paths that fold kept). A fold
+    * costs O(log) ≤ O(2 × live paths + N) and follows at least
+    * max(N, live paths) appends, so each append costs amortized O(1); a
+    * fixed every-N trigger would make it grow with live state. */
   private def maybeCompact(): Unit = {
     eventsSinceCompact += 1
-    if (eventsSinceCompact >= compactEveryEvents) {
+    if (eventsSinceCompact >= math.max(compactEveryEvents, eventPathsKept)) {
       eventsSinceCompact = 0
       checkpoint.foreach(cp =>
         cp.load().foreach { case (events, completed) =>
-          cp.compact(events, completed) })
+          cp.compact(events, completed)
+          noteFold(events)
+        })
     }
+  }
+
+  /** Restart the geometric trigger after a fold of `events`. */
+  private def noteFold(events: Seq[(String, Boolean)]): Unit = {
+    eventPathsKept = events.iterator.map(_._1).distinct.size
+    eventsSinceCompact = 0
   }
 
   /** Rebuild pending-node state after a restart: replay the persisted event
@@ -307,6 +326,7 @@ final class RoutingTable(probe: PathProbe,
           try events.flatMap { case (p, blocked) => receivePath(p, blocked) }
           finally { replaying = false }
         cp.compact(events, completed) // bound the log across restarts
+        noteFold(events)
         // a context is only "already done" when EVERY materialized path
         // completed — a crash after the first partition of a ranged
         // output must re-surface the execution, not strand the rest

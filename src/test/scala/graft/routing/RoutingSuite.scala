@@ -445,6 +445,109 @@ class RoutingSuite extends AnyFunSuite {
       reoffered.forall(_.inputs.head.tip.head.value.toString == "2026-08-12"))
   }
 
+  /** Counts the folds [[RoutingTable]] asks its WAL for. */
+  private final class CountingWal(u: RoutingWal) extends RoutingWal {
+    var compactions = 0
+    def appendEvent(p: String, blocked: Boolean): Unit = u.appendEvent(p, blocked)
+    def appendCompleted(p: String): Unit = u.appendCompleted(p)
+    def compact(events: Seq[(String, Boolean)], completed: Seq[String]): Unit = {
+      compactions += 1; u.compact(events, completed)
+    }
+    def load(): Option[(List[(String, Boolean)], List[String])] = u.load()
+    def close(): Unit = u.close()
+    override def dispose(): Unit = u.dispose()
+  }
+
+  private def soloTable(wal: RoutingWal, n: Int): RoutingTable = {
+    val node = SignalLinkNode(List(extSignal("a", "/data/a", daySpec, "*"))).withAutoLinks
+    val t = new RoutingTable(allExists, Some(wal), compactEveryEvents = n)
+    t.add(new Route("solo", node, outputFor(node, "solo", daySpec), Nil))
+    t
+  }
+
+  private def tmpCheckpoint(prefix: String): RoutingCheckpoint =
+    new RoutingCheckpoint(
+      s"${java.nio.file.Files.createTempDirectory(prefix)}/routing_state.json",
+      new org.apache.hadoop.conf.Configuration())
+
+  private val day0 = java.time.LocalDate.of(2020, 1, 1)
+
+  test("live compaction folds O(log) times over distinct paths") {
+    val wal = new CountingWal(tmpCheckpoint("graft_ckpt_geo"))
+    val t = soloTable(wal, 8)
+    (1 to 2000).foreach(i => t.receivePath(s"/data/a/${day0.plusDays(i.toLong)}"))
+    // a fold every 8 events would be 250 folds, each rewriting the
+    // whole log; the trigger doubles with the paths the last fold kept
+    val bound = math.ceil(math.log(2000.0 / 8) / math.log(2)).toInt + 2
+    assert(wal.compactions <= bound, s"${wal.compactions} folds > $bound")
+    assert(wal.load().get._1.length == 2000)
+    t.disposeWal()
+  }
+
+  test("live compaction keeps the log within 2 x live paths + N") {
+    val wal = new CountingWal(tmpCheckpoint("graft_ckpt_bound"))
+    val t = soloTable(wal, 8)
+    val rnd = new scala.util.Random(11)
+    val seen = scala.collection.mutable.Set.empty[String]
+    (1 to 1500).foreach { i =>
+      // new paths arrive among re-publishes of the ones already live
+      val live = 1 + i / 3
+      val p = s"/data/a/${day0.plusDays(rnd.nextInt(live).toLong)}"
+      t.receivePath(p)
+      seen += p
+      val lines = wal.load().get._1.length
+      assert(lines <= 2 * seen.size + 8,
+        s"after event $i: $lines event lines for ${seen.size} live paths")
+    }
+    assert(wal.compactions > 0)
+    t.disposeWal()
+  }
+
+  test("recover over an unfolded log re-offers what recover after a fold does") {
+    // the compaction law the live fold relies on, on a two-input join
+    // with re-publishes and half the fired outputs completed
+    val a = extSignal("a", "/data/a", daySpec, "*")
+    val b = extSignal("b", "/data/b", daySpec, "*")
+    val node = SignalLinkNode(List(a, b)).withAutoLinks
+    def joinTable(cp: RoutingWal, probe: PathProbe, n: Int): RoutingTable = {
+      val t = new RoutingTable(probe, Some(cp), compactEveryEvents = n)
+      t.add(new Route("join", node, outputFor(node, "join", daySpec), Nil))
+      t
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_law")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    def cpAt(name: String) = new RoutingCheckpoint(s"$dir/$name/routing_state.json", conf)
+    val live = joinTable(cpAt("unfolded"), allExists, Int.MaxValue)
+    val rnd = new scala.util.Random(7)
+    (0 until 300).foreach { _ =>
+      val side = if (rnd.nextBoolean()) "a" else "b"
+      live.receivePath(s"/data/$side/${day0.plusDays(rnd.nextInt(40).toLong)}")
+        .filter(_ => rnd.nextBoolean())
+        .foreach(c => live.markComplete(c.output.materializedPaths.map(p => s"$p/_SUCCESS")))
+    }
+    live.disposeWal()
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$dir/unfolded/routing_state.json.d"),
+      new java.io.File(s"$dir/folded/routing_state.json.d"))
+    val folded = cpAt("folded")
+    val (events, completed) = folded.load().get
+    assert(events.map(_._1).distinct.length < events.length, "no re-publish to fold")
+    folded.compact(events, completed)
+    assert(folded.load().get._1.length == events.map(_._1).distinct.length)
+
+    // inputs as a set: their list order follows arrival order, which the
+    // fold (last occurrence per path) may change
+    def contexts(cp: RoutingCheckpoint): Set[(Set[String], Seq[String])] = {
+      val t = joinTable(cp, new MemProbe(), 8)
+      try t.recover().map(c =>
+        (c.inputs.flatMap(_.materializedPaths).toSet, c.output.materializedPaths)).toSet
+      finally t.disposeWal()
+    }
+    val fromFolded = contexts(folded)
+    assert(fromFolded.nonEmpty)
+    assert(contexts(cpAt("unfolded")) == fromFolded)
+  }
+
   test("pending node TTL expiry fires hook and drops state") {
     val a = extSignal("a", "/data/a", daySpec, "*")
     val b = extSignal("b", "/data/b", daySpec, "*")
