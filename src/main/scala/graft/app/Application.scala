@@ -1628,8 +1628,9 @@ final class Application(val name: String, val spark: SparkSession,
   }
 
   /** Reload routing state persisted by a previous driver (reference
-    * RouteRecord reload, constructs.py:3293-3433): replays the event log to
-    * rebuild pending nodes and RE-RUNS executions that were mid-flight
+    * RouteRecord reload, constructs.py:3293-3433): restores the routing
+    * table's snapshot, replays the log after it (see
+    * [[graft.routing.RoutingTable.recover]]) and RE-RUNS executions that were mid-flight
     * (ready but never completed) when the driver died. Returns their
     * completed output paths. */
   def recover(): List[String] = sharded match {

@@ -5,12 +5,13 @@ import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 
 /** Durable routing state (reference RouteRecord persistence,
   * constructs.py:3293-3433 + drivers/routing/aws.py — per-record DynamoDB
-  * writes there, a write-ahead log here). The routing table is a
-  * deterministic function of its event log, so the checkpoint persists
-  * RECEIVED EVENTS (+ completed paths) and recovery REPLAYS them: pending
-  * nodes are reconstructed by the exact code path that built them
-  * originally, keeping the persisted format independent of in-memory class
-  * shapes.
+  * writes there, a write-ahead log here). The log holds STATE plus a
+  * tail of history: every fold writes a snapshot of one record per pending
+  * node and one per unsettled fired context ([[WalRecord]]), and between
+  * folds the table appends each accepted event, each completed path, and
+  * the sweep's TTL expiries and firings. Recovery restores the newest
+  * snapshot and replays only the log after it; a log without a snapshot
+  * (events only, as every log was before snapshots) replays whole.
   *
   * Layout: a directory of WAL segments — each driver process appends to its
   * OWN segment (created at first write, so no filesystem append support is
@@ -117,10 +118,12 @@ private[routing] object WalCodec {
   /** The compaction law, in ONE place: replay needs only the LAST
     * occurrence per event path (duplicates are node-level deduped; the
     * last blocked flag wins), original order otherwise preserved. */
-  def lastPerPath(events: Seq[(String, Boolean)]): Seq[(String, Boolean)] =
-    events.zipWithIndex
-      .groupBy(_._1._1).map { case (_, occ) => occ.last }
-      .toSeq.sortBy(_._2).map(_._1)
+  def lastPerPath(events: Seq[(String, Boolean)]): Seq[(String, Boolean)] = {
+    val seen = new java.util.HashSet[String]()
+    var kept = List.empty[(String, Boolean)]
+    events.reverseIterator.foreach(e => if (seen.add(e._1)) kept ::= e)
+    kept
+  }
 
   /** The snapshot BODY, in one place (shared by [[RoutingCheckpoint]]
     * and the sharded EpochWal — a line-format or durability fix must
@@ -133,6 +136,90 @@ private[routing] object WalCodec {
     completed.distinct.foreach(p =>
       out.write(s"c\t${esc(p)}\n".getBytes("UTF-8")))
   }
+}
+
+/** The routing table's own records, carried through the [[RoutingWal]]
+  * surface as event entries whose payload starts with NUL — no event path
+  * does (only paths under a route's source root are logged) — so the line
+  * format and every WAL backend stay as they are. Fields are NUL-separated,
+  * with `%` and NUL escaped inside a field.
+  *
+  * A fold writes one snapshot: a [[WalRecord.Node]] per pending node and a
+  * [[WalRecord.Fired]] per unsettled fired context, all tagged with one
+  * snapshot id and numbered (so no two payloads are equal and the
+  * last-per-path fold of `compact` keeps every one), or a single
+  * [[WalRecord.Empty]] when there is neither. Between folds the table
+  * appends one [[WalRecord.Swept]] per sweep that expired or fired a node,
+  * which no logged event would replay. */
+private[routing] sealed trait WalRecord
+private[routing] object WalRecord {
+  type Receipt = (String, Boolean)
+
+  /** A record of the snapshot `snap`. */
+  sealed trait Snap extends WalRecord { def snap: String }
+  /** A pending node: its route, creation time and the (tip path, blocked)
+    * offers that changed its state, in arrival order. */
+  final case class Node(snap: String, routeId: String, createdAtMillis: Long,
+                        receipts: List[Receipt]) extends Snap
+  /** A fired context no `markComplete` has settled yet: the receipts of
+    * the node that fired it. */
+  final case class Fired(snap: String, routeId: String,
+                         receipts: List[Receipt]) extends Snap
+  /** A snapshot with no node and no context. */
+  final case class Empty(snap: String) extends Snap
+  /** A sweep at `nowMillis` of one route (`only`) or of all: it expired
+    * nodes by TTL at that time, then fired the pending nodes listed as
+    * (route, first receipt path) — a route never holds two pending nodes
+    * created by one path, since the first node consumes the second offer. */
+  final case class Swept(nowMillis: Long, only: Option[String],
+                         fired: List[(String, String)]) extends WalRecord
+
+  private val Sep = '\u0000'
+  def isRecord(payload: String): Boolean =
+    payload.nonEmpty && payload.charAt(0) == Sep
+
+  private def escF(s: String): String =
+    s.replace("%", "%25").replace("\u0000", "%00")
+  private def unescF(s: String): String =
+    s.replace("%00", "\u0000").replace("%25", "%")
+  private def enc(fields: Seq[String]): String =
+    fields.iterator.map(escF).mkString(Sep.toString, Sep.toString, "")
+  private def encReceipts(rs: List[Receipt]): Seq[String] =
+    rs.map { case (p, b) => (if (b) "b" else "e") + p }
+  private def decReceipts(fs: Seq[String]): List[Receipt] =
+    fs.iterator.map(f => (f.substring(1), f.charAt(0) == 'b')).toList
+
+  def node(snap: String, serial: Int, routeId: String, createdAtMillis: Long,
+           receipts: List[Receipt]): String =
+    enc(Seq("n", snap, serial.toString, routeId, createdAtMillis.toString) ++
+      encReceipts(receipts))
+  def fired(snap: String, serial: Int, routeId: String,
+            receipts: List[Receipt]): String =
+    enc(Seq("x", snap, serial.toString, routeId) ++ encReceipts(receipts))
+  def empty(snap: String): String = enc(Seq("s", snap))
+  def swept(nowMillis: Long, only: Option[String],
+            fired: Seq[(String, String)]): String =
+    enc(Seq("w", nowMillis.toString, only.fold("")("r" + _)) ++
+      fired.flatMap { case (r, p) => Seq(r, p) })
+
+  /** The record a reserved payload holds; None for an event path or an
+    * unreadable record (skipped, like an unknown line kind). */
+  def parse(payload: String): Option[WalRecord] =
+    if (!isRecord(payload)) None
+    else {
+      val f = payload.substring(1).split(Sep.toString, -1).map(unescF).toSeq
+      try f match {
+        case Seq("n", snap, _, route, at, rs @ _*) if rs.nonEmpty =>
+          Some(Node(snap, route, at.toLong, decReceipts(rs)))
+        case Seq("x", snap, _, route, rs @ _*) if rs.nonEmpty =>
+          Some(Fired(snap, route, decReceipts(rs)))
+        case Seq("s", snap) => Some(Empty(snap))
+        case Seq("w", now, only, fired @ _*) if fired.length % 2 == 0 =>
+          Some(Swept(now.toLong, if (only.isEmpty) None else Some(only.substring(1)),
+            fired.grouped(2).map(rp => (rp(0), rp(1))).toList))
+        case _ => None
+      } catch { case _: NumberFormatException | _: StringIndexOutOfBoundsException => None }
+    }
 }
 
 final class RoutingCheckpoint(path: String, conf: Configuration)
@@ -193,11 +280,10 @@ final class RoutingCheckpoint(path: String, conf: Configuration)
     try fs.close() catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** Compact the log into one snapshot segment and drop the older ones.
-    * Replay only needs the LAST occurrence per event path (duplicate
-    * re-publishes are node-level deduped; the last blocked flag wins) and
-    * the distinct completed set — so re-published partitions stop growing
-    * the log. Called after a successful recovery replay. */
+  /** Replace the log with one snapshot segment holding `events` (last
+    * occurrence per payload) and the distinct `completed` set, and drop the
+    * older segments. The table's folds pass their [[WalRecord]] snapshot
+    * as `events`. */
   def compact(events: Seq[(String, Boolean)], completed: Seq[String]): Unit =
     synchronized {
       if (!fs.exists(dir)) return

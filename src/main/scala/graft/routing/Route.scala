@@ -140,10 +140,39 @@ final class Route(
       candSet.contains(n) && n.isReady(probe))
     pending = waiting
     ctrs = ctrs.copy(triggers = ctrs.triggers + ready.length)
-    ready.map { n =>
-      ExecutionContext(id, n.materializedInputs(probe), n.materializeOutput())
-    }
+    ready.map(fire(_, probe))
   }
+
+  /** Called with every node that fires and its context (the table's
+    * unsettled-context ledger, set by [[RoutingTable.add]]). */
+  private[routing] var onFire: (RuntimeLinkNode, ExecutionContext) => Unit =
+    (_, _) => ()
+
+  private[routing] def fire(n: RuntimeLinkNode, probe: PathProbe): ExecutionContext = {
+    val c = ExecutionContext(id, n.materializedInputs(probe), n.materializeOutput())
+    onFire(n, c)
+    c
+  }
+
+  private[routing] def newNode(createdAtMillis: Long): RuntimeLinkNode =
+    new RuntimeLinkNode(linkNode, output, outputLinks, createdAtMillis)
+
+  /** Re-admit pending nodes rebuilt from a snapshot, in their order. */
+  private[routing] def restore(nodes: Seq[RuntimeLinkNode]): Unit = {
+    pending = pending ++ nodes
+    ctrs = ctrs.copy(pendingCreated = ctrs.pendingCreated + nodes.length)
+    nodes.foreach(hooks.onPendingNodeCreated(this, _))
+  }
+
+  /** Fire the pending node created by `firstPath` (a logged sweep firing,
+    * replayed at recovery). */
+  private[routing] def fireLogged(firstPath: String,
+                                  probe: PathProbe): Option[ExecutionContext] =
+    pending.find(_.firstPath.contains(firstPath)).map { n =>
+      pending = pending.filterNot(_ eq n)
+      ctrs = ctrs.copy(triggers = ctrs.triggers + 1)
+      fire(n, probe)
+    }
 
   /** Re-evaluate pending nodes WITHOUT a new event (the reference
     * orchestration cycle's pending-node checker, processor `next_cycle` +
@@ -192,11 +221,17 @@ final class Route(
   * (constructs.py:2685-2741, 3293-3433); the per-route DynamoDB lock is a
   * plain object monitor here.
   *
-  * @param compactEveryEvents the floor N of the live-compaction trigger:
-  *   the WAL is folded once the events appended since the last fold reach
-  *   max(N, event paths that fold kept), so the log stays ≤ 2 × live
-  *   paths + N event lines and appends cost amortized O(1). While live
-  *   paths stay under N, this is a fold every N events.
+  * With a WAL, every fold replaces the log with a snapshot of state: one
+  * record per pending node and one per unsettled fired context (a context
+  * is settled once [[markComplete]] names each of its output paths, or a
+  * marker directly under one). [[recover]] restores the newest snapshot
+  * and replays only the log after it.
+  *
+  * @param compactEveryEvents the floor N of the live fold trigger: the
+  *   table folds once the lines appended since the last fold reach
+  *   max(N, records that fold wrote), so the log stays ≤ 2 × snapshot
+  *   records + N lines and appends cost amortized O(1). While the live
+  *   state stays under N records, this is a fold every N lines.
   */
 final class RoutingTable(probe: PathProbe,
                          checkpoint: Option[RoutingWal] = None,
@@ -205,8 +240,71 @@ final class RoutingTable(probe: PathProbe,
   private var routes: List[Route] = Nil
   private var replaying = false
   private var eventsSinceCompact = 0
-  /** Distinct event paths the last fold wrote (see [[maybeCompact]]). */
-  private var eventPathsKept = 0
+  /** Records the last fold wrote (see [[maybeCompact]]). */
+  private var recordsKept = 0
+
+  /** A fired context awaiting settlement: the route and receipts of the
+    * node that fired it, and the output paths not yet named complete. */
+  private final class Fired(val routeId: String,
+                            val receipts: List[(String, Boolean)],
+                            var open: Set[String])
+  /** Unsettled contexts in firing order, and by each open output path.
+    * Two firings of one node state (route and receipts) are one entry:
+    * one execution to re-offer. */
+  private val unsettled = scala.collection.mutable.LinkedHashSet.empty[Fired]
+  private val unsettledByPath =
+    scala.collection.mutable.HashMap.empty[String, List[Fired]]
+  /** While [[recover]] runs: every context it fired, by ledger entry. */
+  private var recovering: scala.collection.mutable.LinkedHashMap[Fired, ExecutionContext] = _
+  /** While a sweep runs with a WAL: (route, first path) of each node it
+    * fired. */
+  private var sweepFired: scala.collection.mutable.ListBuffer[(String, String)] = _
+
+  private def noteFired(route: Route, n: RuntimeLinkNode, c: ExecutionContext): Unit = {
+    val receipts = n.receipts
+    val outputs = c.output.materializedPaths
+    val f = outputs.headOption.flatMap(unsettledByPath.get).flatMap(_.find(f =>
+      f.routeId == route.id && f.receipts == receipts)).getOrElse {
+      val f = new Fired(route.id, receipts, outputs.toSet)
+      unsettled += f
+      f.open.foreach(p => unsettledByPath(p) = f :: unsettledByPath.getOrElse(p, Nil))
+      f
+    }
+    if (recovering != null) recovering.getOrElseUpdate(f, c)
+    if (sweepFired != null) n.firstPath.foreach(p => sweepFired += ((route.id, p)))
+  }
+
+  /** `key` (an output path) was named complete. */
+  private def settle(key: String): Unit =
+    unsettledByPath.remove(key).foreach(_.foreach { f =>
+      f.open -= key
+      if (f.open.isEmpty) unsettled -= f
+    })
+
+  private def dropUnsettled(f: Fired): Unit = {
+    unsettled -= f
+    f.open.foreach { p =>
+      unsettledByPath.get(p).foreach { fs =>
+        val rest = fs.filterNot(_ eq f)
+        if (rest.isEmpty) unsettledByPath.remove(p) else unsettledByPath(p) = rest
+      }
+    }
+  }
+
+  /** Contexts fired and not yet settled, as (route, output paths). */
+  def unsettledContexts: List[(String, Set[String])] = synchronized {
+    unsettled.iterator.map(f => (f.routeId, f.open)).toList
+  }
+
+  /** Does an unsettled context wait on `path` being named complete? */
+  def awaitsCompletion(path: String): Boolean = synchronized {
+    unsettledByPath.contains(path) || parentOf(path).exists(unsettledByPath.contains)
+  }
+
+  private def parentOf(p: String): Option[String] = {
+    val i = p.lastIndexOf('/')
+    if (i > 0) Some(p.substring(0, i)) else None
+  }
 
   // ---- event→route index (reference RouteIndex, constructs.py:
   // 2705-2741): both dispatch paths were linear scans over every
@@ -225,6 +323,7 @@ final class RoutingTable(probe: PathProbe,
 
   def add(route: Route): Unit = synchronized {
     routes :+= route
+    if (checkpoint.isDefined) route.onFire = noteFired(route, _, _)
     route.linkNode.signals.foreach { s =>
       if (!s.isReference) {
         val rk = (s.source.kind, s.source.rootPath)
@@ -261,80 +360,153 @@ final class RoutingTable(probe: PathProbe,
       // nothing at replay, so logging it would just grow the WAL forever
       // on a long-lived driver), at tip granularity (reference ONLY_HEAD
       // processing mode) so a restart can rebuild pending state by
-      // replaying the event log.
+      // replaying the events logged after the last snapshot.
       // KNOWN TRADE-OFF: if a LATER driver adds a route consuming a
       // source that fired only before the route existed, replay cannot
       // seed that pending node (the event was never logged) — matching
       // the reference, which also persists per-route records only; use
       // execute/backfill to redeem pre-declaration events.
       // KNOWN GRANULARITY LIMIT: a multi-partition event signal (e.g.
-      // ground() of a ranged view) replays as its tip partition only —
-      // completion checks still probe the real filesystem, but replayed
-      // pending nodes track the tip path, not the full range.
-      if (!replaying && matching.nonEmpty) {
-        incoming.materializedPaths.headOption.foreach(p =>
-          checkpoint.foreach(_.appendEvent(p, isBlocked)))
-        maybeCompact()
-      }
-      matching.flatMap(_.receive(incoming, cachingProbe, isBlocked = isBlocked))
+      // ground() of a ranged view) replays as its tip partition only,
+      // and a node's receipts record tips too — completion checks still
+      // probe the real filesystem, but recovered pending nodes track the
+      // tip path, not the full range.
+      val logged = !replaying && matching.nonEmpty
+      if (logged) incoming.materializedPaths.headOption.foreach(p =>
+        checkpoint.foreach(_.appendEvent(p, isBlocked)))
+      val ctxs = matching.flatMap(_.receive(incoming, cachingProbe, isBlocked = isBlocked))
+      // after dispatch: a fold here snapshots this event's effect, since
+      // it drops the segment the event was just appended to
+      if (logged) maybeCompact(1)
+      ctxs
     }
 
-  /** Live compaction, so the log stays bounded between restarts of a
+  /** Live fold, so the log stays bounded between restarts of a
     * long-lived driver. Geometric (the size-ratio merge policy of
-    * log-structured stores): fold the log to last-occurrence-per-path +
-    * distinct completed set once the events appended since the last fold
-    * reach max(`compactEveryEvents`, event paths that fold kept). A fold
-    * costs O(log) ≤ O(2 × live paths + N) and follows at least
-    * max(N, live paths) appends, so each append costs amortized O(1); a
-    * fixed every-N trigger would make it grow with live state. */
-  private def maybeCompact(): Unit = {
-    eventsSinceCompact += 1
-    if (eventsSinceCompact >= math.max(compactEveryEvents, eventPathsKept)) {
-      eventsSinceCompact = 0
-      checkpoint.foreach(cp =>
-        cp.load().foreach { case (events, completed) =>
-          cp.compact(events, completed)
-          noteFold(events)
-        })
-    }
+    * log-structured stores): fold once the lines appended since the last
+    * fold reach max(`compactEveryEvents`, records that fold wrote). A fold
+    * writes O(records) from memory and follows at least max(N, records)
+    * appends, so each append costs amortized O(1); a fixed every-N
+    * trigger would make it grow with live state. */
+  private def maybeCompact(appended: Int): Unit = {
+    eventsSinceCompact += appended
+    if (eventsSinceCompact >= math.max(compactEveryEvents, recordsKept)) fold()
   }
 
-  /** Restart the geometric trigger after a fold of `events`. */
-  private def noteFold(events: Seq[(String, Boolean)]): Unit = {
-    eventPathsKept = events.iterator.map(_._1).distinct.size
+  /** Replace the log with a snapshot of this table's state: every pending
+    * node, then every unsettled context, then the completed set. */
+  private def fold(): Unit = {
+    checkpoint.foreach { cp =>
+      val snap = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+      val recs = scala.collection.mutable.ListBuffer.empty[(String, Boolean)]
+      routes.foreach(r => r.pendingNodes.foreach { n =>
+        recs += ((WalRecord.node(snap, recs.length, r.id, n.createdAtMillis, n.receipts), false))
+      })
+      unsettled.foreach { f =>
+        recs += ((WalRecord.fired(snap, recs.length, f.routeId, f.receipts), false))
+      }
+      recordsKept = recs.length
+      if (recs.isEmpty) recs += ((WalRecord.empty(snap), false))
+      cp.compact(recs.toList, cachingProbe.markedPaths)
+    }
     eventsSinceCompact = 0
   }
 
-  /** Rebuild pending-node state after a restart: replay the persisted event
-    * log through the normal receive path (reference RouteRecord reload).
-    * Returns contexts that became ready but whose outputs never completed —
-    * the executions that were mid-flight when the previous driver died. */
-  /** `staleOutput` (r17): a replayed context whose output is COMPLETE is
-    * normally dropped as already-done — but when the caller can prove
-    * the output is STALE (an input re-published with a newer completion
-    * stamp before the crash), dropping it silently loses the recompute.
-    * The predicate re-offers exactly those; the default keeps the
-    * conservative drop (routing has only an exists-probe — stamping
-    * lives at the app layer). */
+  /** Rebuild routing state after a restart (reference RouteRecord
+    * reload) and return the contexts to re-offer: the executions that were
+    * mid-flight when the previous driver died.
+    *
+    * Restores the newest snapshot — each pending node rebuilt in its own
+    * route from its receipts, each unsettled context re-fired from the
+    * node that fired it — then replays the log after the snapshot through
+    * the normal receive path, with the sweeps' logged expiries and
+    * firings. A log without a snapshot replays whole. Finally folds.
+    *
+    * A fired context whose output is COMPLETE (every materialized path —
+    * a crash after the first partition of a ranged output must re-surface
+    * the execution, not strand the rest) is dropped as already done,
+    * unless `staleOutput` proves it STALE: an input re-published with a
+    * newer completion stamp before the crash, where dropping it would
+    * silently lose the recompute (routing has only an exists-probe —
+    * stamping lives at the app layer). A dropped context stays unsettled
+    * until the completed set names its outputs. */
   def recover(staleOutput: ExecutionContext => Boolean = _ => false)
       : List[ExecutionContext] = synchronized {
-    checkpoint.flatMap(cp => cp.load().map((cp, _))).map {
-      case (cp, (events, completed)) =>
-        cachingProbe.markComplete(completed)
-        replaying = true
-        val ctxs =
-          try events.flatMap { case (p, blocked) => receivePath(p, blocked) }
-          finally { replaying = false }
-        cp.compact(events, completed) // bound the log across restarts
-        noteFold(events)
-        // a context is only "already done" when EVERY materialized path
-        // completed — a crash after the first partition of a ranged
-        // output must re-surface the execution, not strand the rest
-        ctxs.filterNot(c => c.output.materializedPaths.nonEmpty &&
+    checkpoint.flatMap(_.load()).map { case (log, completed) =>
+      cachingProbe.markComplete(completed)
+      val fired = scala.collection.mutable.LinkedHashMap.empty[Fired, ExecutionContext]
+      recovering = fired
+      replaying = true
+      try replay(log.toIndexedSeq)
+      finally { replaying = false; recovering = null }
+      lazy val named: Set[String] = completed.iterator.flatMap(p => p :: parentOf(p).toList).toSet
+      val offered = fired.toList.filter { case (f, c) =>
+        val done = c.output.materializedPaths.nonEmpty &&
           c.output.materializedPaths.forall(p =>
             cachingProbe.isComplete(p, c.output.source.protocol)) &&
-          !staleOutput(c))
+          !staleOutput(c)
+        if (done && f.open.forall(named)) dropUnsettled(f)
+        !done
+      }
+      fold() // bound the log across restarts
+      offered.map(_._2)
     }.getOrElse(Nil)
+  }
+
+  private def replay(log: IndexedSeq[(String, Boolean)]): Unit = {
+    // the newest snapshot's records end at the last snapshot record;
+    // everything before its first record is subsumed by it
+    var last = log.length - 1
+    var snap: String = null
+    while (snap == null && last >= 0) {
+      WalRecord.parse(log(last)._1) match {
+        case Some(r: WalRecord.Snap) => snap = r.snap
+        case _ => last -= 1
+      }
+    }
+    var first = last
+    while (first > 0 && (WalRecord.parse(log(first - 1)._1) match {
+      case Some(r: WalRecord.Snap) => r.snap == snap
+      case _ => false
+    })) first -= 1
+    val byId = routes.iterator.map(r => r.id -> r).toMap
+    val decoded = scala.collection.mutable.HashMap.empty[String, List[Signal]]
+    def rebuild(r: Route, createdAtMillis: Long,
+                receipts: List[(String, Boolean)]): RuntimeLinkNode = {
+      val n = r.newNode(createdAtMillis)
+      receipts.foreach { case (p, b) =>
+        decoded.getOrElseUpdate(p, decode(p)).foreach(s =>
+          if (r.accepts(s)) n.receive(s, b))
+      }
+      n
+    }
+    val restored = scala.collection.mutable.LinkedHashMap.empty[Route, Vector[RuntimeLinkNode]]
+    if (snap != null) (first to last).foreach { i =>
+      WalRecord.parse(log(i)._1) match {
+        case Some(WalRecord.Node(_, id, at, receipts)) => byId.get(id).foreach { r =>
+          val n = rebuild(r, at, receipts)
+          if (!n.isZombie && n.ready.nonEmpty)
+            restored(r) = restored.getOrElse(r, Vector.empty) :+ n
+        }
+        case Some(WalRecord.Fired(_, id, receipts)) => byId.get(id).foreach { r =>
+          val n = rebuild(r, System.currentTimeMillis(), receipts)
+          if (!n.isZombie && n.allSignalsReady) r.fire(n, cachingProbe)
+        }
+        case _ => ()
+      }
+    }
+    restored.foreach { case (r, ns) => r.restore(ns) }
+    ((last + 1) until log.length).foreach { i =>
+      val (p, blocked) = log(i)
+      if (!WalRecord.isRecord(p)) receivePath(p, blocked)
+      else WalRecord.parse(p) match {
+        case Some(WalRecord.Swept(now, only, fired)) =>
+          routes.foreach(r => if (only.forall(_ == r.id)) r.expireNodes(now))
+          fired.foreach { case (id, path) =>
+            byId.get(id).foreach(_.fireLogged(path, cachingProbe)) }
+        case _ => ()
+      }
+    }
   }
 
   /** Ingest a raw physical path event: decode against every route input
@@ -351,18 +523,21 @@ final class RoutingTable(probe: PathProbe,
       // match their route's rootPath
       val normalized =
         if (p.getName.startsWith("part-")) p.getParent.toString else path
-      val decoded: List[Signal] = ancestorPrefixes(normalized)
-        .flatMap(r => signalsByRoot.getOrElse(r, Nil))
-        .flatMap(s => s.fromEventPath(normalized)).distinct
-      // nested source roots are legal (boundary-aware prefix decode), so
-      // one path can decode against SEVERAL resources — dispatch every
-      // DISTINCT RESOURCE, not just the first. Dedup by resource, not by
-      // Signal: routes aliasing the same source each contribute a decode,
-      // but receive() already fans one resource's event out to every
-      // matching route — per-alias dispatch would multiply deliveries.
-      decoded.distinctBy(s => (s.source.kind, s.source.rootPath))
-        .flatMap(s => receive(s, isBlocked))
+      decode(normalized).flatMap(s => receive(s, isBlocked))
     }
+
+  /** The event signals of a normalized path, one per resource. Nested
+    * source roots are legal (boundary-aware prefix decode), so one path
+    * can decode against SEVERAL resources — dispatch every DISTINCT
+    * RESOURCE, not just the first. Dedup by resource, not by Signal:
+    * routes aliasing the same source each contribute a decode, but
+    * receive() already fans one resource's event out to every matching
+    * route — per-alias dispatch would multiply deliveries. */
+  private def decode(normalized: String): List[Signal] =
+    ancestorPrefixes(normalized)
+      .flatMap(r => signalsByRoot.getOrElse(r, Nil))
+      .flatMap(s => s.fromEventPath(normalized)).distinct
+      .distinctBy(s => (s.source.kind, s.source.rootPath))
 
   /** Re-run every route's pending completion checks without an event
     * (the orchestration-cycle sweep; see [[Route.sweep]]).
@@ -378,17 +553,18 @@ final class RoutingTable(probe: PathProbe,
     * probe under the monitor — bounded by the handful of new nodes, not
     * by the waiting backlog. */
   def sweepPending(nowMillis: Long = System.currentTimeMillis()): List[ExecutionContext] =
-    sweepWhere(_ => true, nowMillis)
+    sweepWhere(None, nowMillis)
 
   /** [[sweepPending]] narrowed to ONE route (reference
     * update_active_route_status → check_active_route). */
   def sweepPendingRoute(id: String,
                         nowMillis: Long = System.currentTimeMillis())
       : List[ExecutionContext] =
-    sweepWhere(_.id == id, nowMillis)
+    sweepWhere(Some(id), nowMillis)
 
-  private def sweepWhere(sel: Route => Boolean,
+  private def sweepWhere(only: Option[String],
                          nowMillis: Long): List[ExecutionContext] = {
+    val sel = (r: Route) => only.forall(_ == r.id)
     val perRoute = synchronized {
       routes.filter(r => sel(r) && r.pendingNodes.nonEmpty)
         .map(r => r -> r.pendingNodes.flatMap(_.probeTargets).distinct)
@@ -405,8 +581,21 @@ final class RoutingTable(probe: PathProbe,
             probeKeys(p, proto).exists(failedKeys.contains) })
       }
       val sp = new SnapshotProbe(cachingProbe, snap)
-      routes.filter(r => sel(r) && r.pendingNodes.nonEmpty)
-        .flatMap(_.sweep(sp, nowMillis))
+      val swept = routes.filter(r => sel(r) && r.pendingNodes.nonEmpty)
+      checkpoint match {
+        case None => swept.flatMap(_.sweep(sp, nowMillis))
+        case Some(cp) =>
+          // log what no event replays: the sweep's expiries and firings
+          val expired0 = swept.map(_.counters.pendingExpired).sum
+          val fired = scala.collection.mutable.ListBuffer.empty[(String, String)]
+          sweepFired = fired
+          val ctxs = try swept.flatMap(_.sweep(sp, nowMillis)) finally sweepFired = null
+          if (fired.nonEmpty || swept.map(_.counters.pendingExpired).sum > expired0) {
+            cp.appendEvent(WalRecord.swept(nowMillis, only, fired.toList), false)
+            maybeCompact(1)
+          }
+          ctxs
+      }
     }
   }
 
@@ -546,6 +735,11 @@ final class RoutingTable(probe: PathProbe,
     cachingProbe.markComplete(paths)
     if (!replaying)
       paths.foreach(p => checkpoint.foreach(_.appendCompleted(p)))
+    // settle the contexts whose output this path, or a marker under it, names
+    if (unsettledByPath.nonEmpty) paths.foreach { p =>
+      settle(p)
+      parentOf(p).foreach(settle)
+    }
   }
 }
 

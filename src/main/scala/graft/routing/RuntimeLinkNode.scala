@@ -18,14 +18,18 @@ trait PathProbe {
 }
 
 /** Memoizing wrapper: completed paths never get re-probed (reference
-  * completed-path cache, routing_runtime_constructs.py:317-330). */
+  * completed-path cache, routing_runtime_constructs.py:317-330). One
+  * entry per path tells paths marked complete (the routing table's
+  * persisted completed set) from positive probe answers (remembered for
+  * this process only). */
 final class CachingProbe(underlying: PathProbe) extends PathProbe {
-  private val completed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Known-complete paths: TRUE when marked, FALSE when probed. */
+  private val known =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   def exists(path: String): Boolean =
-    completed.contains(path) || {
+    known.containsKey(path) || {
       val ok = underlying.exists(path)
-      if (ok) completed.add(path)
+      if (ok) known.putIfAbsent(path, java.lang.Boolean.FALSE)
       ok
     }
   /** Delegate protocol-less completeness to the UNDERLYING probe (which
@@ -35,9 +39,9 @@ final class CachingProbe(underlying: PathProbe) extends PathProbe {
   override def isComplete(path: String, protocol: IntegrityProtocol): Boolean =
     protocol match {
       case IntegrityProtocol.None_ =>
-        completed.contains(path) || {
+        known.containsKey(path) || {
           val ok = underlying.isComplete(path, protocol)
-          if (ok) completed.add(path)
+          if (ok) known.putIfAbsent(path, java.lang.Boolean.FALSE)
           ok
         }
       case IntegrityProtocol.FileCheck(fs) =>
@@ -45,7 +49,14 @@ final class CachingProbe(underlying: PathProbe) extends PathProbe {
     }
   /** Cross-node range transfer: pre-seed known-complete resources
     * (reference transfer_ranges, routing_runtime_constructs.py:370-395). */
-  def markComplete(paths: Iterable[String]): Unit = paths.foreach(completed.add)
+  def markComplete(paths: Iterable[String]): Unit =
+    paths.foreach(known.put(_, java.lang.Boolean.TRUE))
+  /** Every path [[markComplete]] was given. */
+  def markedPaths: Seq[String] = {
+    val b = Vector.newBuilder[String]
+    known.forEach((p, marked) => if (marked) b += p)
+    b.result()
+  }
 }
 
 /** Runtime instantiation of a SignalLinkNode: accumulates ready signals
@@ -67,12 +78,27 @@ final class RuntimeLinkNode(
   private var readySignals: List[Signal] = Nil
   private val processedPaths = scala.collection.mutable.Set.empty[String]
   private val blockedPaths = scala.collection.mutable.Set.empty[String]
+  /** The offers that changed this node's state, newest first. */
+  private var receiptsRev: List[(String, Boolean)] = Nil
   var isZombie: Boolean = false
   /** Highest pending-node checkpoint mark (secs) already fired for this
     * node (reference last_checkpoint_mark, constructs.py:2812-2817). */
   private[routing] var lastCheckpointMark: Long = 0L
 
   def ready: List[Signal] = readySignals
+
+  /** (tip path, blocked) of every offer that changed this node's ready
+    * signals or blocked paths, in arrival order. An offer that changed
+    * neither left the node as it was, so offering these alone to a fresh
+    * node, decoded as the table decodes events, rebuilds this node: its
+    * snapshot record ([[WalRecord.Node]]). */
+  def receipts: List[(String, Boolean)] = receiptsRev.reverse
+
+  /** Paths this node holds blocked. */
+  def blocked: Set[String] = blockedPaths.toSet
+
+  /** The path that created this node (its first receipt). */
+  def firstPath: Option[String] = receiptsRev.lastOption.map(_._1)
 
   /** Tips aligned check (J1): every link between an already-ready signal and
     * the candidate must map to the candidate's tip value.
@@ -132,8 +158,18 @@ final class RuntimeLinkNode(
     * signal is admitted but the node won't fire while any ready resource is
     * blocked; a later un-blocked event for the same path clears it. */
   def receive(incoming: Signal, isBlocked: Boolean): Boolean = {
-    if (isBlocked) blockedPaths ++= incoming.materializedPaths
-    else blockedPaths --= incoming.materializedPaths.toSet
+    val paths = incoming.materializedPaths
+    val blockChanged = paths.foldLeft(false) { (changed, p) =>
+      (if (isBlocked) blockedPaths.add(p) else blockedPaths.remove(p)) || changed
+    }
+    val before = readySignals
+    val consumed = consume(incoming)
+    if ((blockChanged || (readySignals ne before)) && paths.nonEmpty)
+      receiptsRev ::= ((paths.head, isBlocked))
+    consumed
+  }
+
+  private def consume(incoming: Signal): Boolean = {
     if (incoming.materializedPaths.toSet.subsetOf(processedPaths)) return true
 
     var consumed = false

@@ -1066,8 +1066,8 @@ final class ShardedDriver(root: String, val driverId: String,
     }
 
   /** Try to take ownership of `shard`: acquire (or take over) the lease,
-    * replay the shard WAL through fresh route instances (pending nodes
-    * rebuilt by the normal receive path), compact at the new epoch (the
+    * recover the shard WAL into fresh route instances
+    * ([[RoutingTable.recover]]), compact at the new epoch (the
     * fencing barrier), then drain the inbox backlog. Returns the
     * recovered mid-flight contexts plus any contexts the inbox backlog
     * readied; None when the lease is held by a live owner or lost to a
@@ -1165,6 +1165,11 @@ final class ShardedDriver(root: String, val driverId: String,
     val local = accepting.intersect(live).toList.flatMap { s =>
       owned(s).table.markComplete(Seq(path))
       owned(s).table.receivePath(path)
+    }
+    // the producing shard settles the context that wrote `path`
+    live.diff(accepting).foreach { s =>
+      val t = owned(s).table
+      if (t.awaitsCompletion(path)) t.markComplete(Seq(path))
     }
     accepting.diff(live).foreach(s =>
       sendToInbox(s, List(s"c\t${WalCodec.esc(path)}",
