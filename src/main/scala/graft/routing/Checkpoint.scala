@@ -10,8 +10,10 @@ import org.apache.hadoop.fs.{FSDataOutputStream, Path}
   * node and one per unsettled fired context ([[WalRecord]]), and between
   * folds the table appends each accepted event, each completed path, and
   * the sweep's TTL expiries and firings. Recovery restores the newest
-  * snapshot and replays only the log after it; a log without a snapshot
-  * (events only, as every log was before snapshots) replays whole.
+  * complete snapshot and replays only the log after it; a log without one
+  * (events only, as every log was before snapshots) replays whole. A
+  * snapshot replaces the segments before it only once written whole, so a
+  * crash mid-fold loses nothing.
   *
   * Layout: a directory of WAL segments — each driver process appends to its
   * OWN segment (created at first write, so no filesystem append support is
@@ -125,6 +127,21 @@ private[routing] object WalCodec {
     kept
   }
 
+  /** Write `dir/name` whole or not at all: the body goes to `tmp-<name>`,
+    * a name no replay reads, which is renamed once closed. A crash
+    * mid-write leaves only a `tmp-` file, deleted by a later compaction,
+    * and the segments the snapshot would have replaced stay readable. */
+  def publish(fs: org.apache.hadoop.fs.FileSystem, dir: Path, name: String)
+             (body: java.io.OutputStream => Unit): Unit = {
+    val tmp = new Path(dir, s"tmp-$name")
+    val out = fs.create(tmp, true)
+    try body(out) finally out.close()
+    if (!fs.rename(tmp, new Path(dir, name))) {
+      fs.delete(tmp, false)
+      throw new java.io.IOException(s"could not rename $tmp to $name")
+    }
+  }
+
   /** The snapshot BODY, in one place (shared by [[RoutingCheckpoint]]
     * and the sharded EpochWal — a line-format or durability fix must
     * not have to land twice): last event per path + distinct completed
@@ -145,28 +162,36 @@ private[routing] object WalCodec {
   * with `%` and NUL escaped inside a field.
   *
   * A fold writes one snapshot: a [[WalRecord.Node]] per pending node and a
-  * [[WalRecord.Fired]] per unsettled fired context, all tagged with one
-  * snapshot id and numbered (so no two payloads are equal and the
-  * last-per-path fold of `compact` keeps every one), or a single
-  * [[WalRecord.Empty]] when there is neither. Between folds the table
-  * appends one [[WalRecord.Swept]] per sweep that expired or fired a node,
-  * which no logged event would replay. */
+  * [[WalRecord.Fired]] per unsettled fired context, or a single
+  * [[WalRecord.Empty]] when there is neither. Each record carries the
+  * snapshot id, its serial and the snapshot's size, so no two payloads are
+  * equal (the last-per-path fold of `compact` keeps every one) and the
+  * last record tells whether the snapshot was written whole; one cut short
+  * by a crash is not restored. Between folds the table appends one
+  * [[WalRecord.Swept]] per sweep that expired or fired a node, which no
+  * logged event would replay. */
 private[routing] sealed trait WalRecord
 private[routing] object WalRecord {
   type Receipt = (String, Boolean)
 
-  /** A record of the snapshot `snap`. */
-  sealed trait Snap extends WalRecord { def snap: String }
+  /** Record `serial` (from 0) of the `size` records of the snapshot
+    * `snap`, written in serial order. */
+  sealed trait Snap extends WalRecord {
+    def snap: String; def serial: Int; def size: Int
+  }
   /** A pending node: its route, creation time and the (tip path, blocked)
     * offers that changed its state, in arrival order. */
-  final case class Node(snap: String, routeId: String, createdAtMillis: Long,
-                        receipts: List[Receipt]) extends Snap
+  final case class Node(snap: String, serial: Int, size: Int, routeId: String,
+                        createdAtMillis: Long, receipts: List[Receipt]) extends Snap
   /** A fired context no `markComplete` has settled yet: the receipts of
-    * the node that fired it. */
-  final case class Fired(snap: String, routeId: String,
-                         receipts: List[Receipt]) extends Snap
-  /** A snapshot with no node and no context. */
-  final case class Empty(snap: String) extends Snap
+    * the node that fired it, and whether a recovery already dropped it as
+    * done. */
+  final case class Fired(snap: String, serial: Int, size: Int, routeId: String,
+                         receipts: List[Receipt], dropped: Boolean) extends Snap
+  /** A snapshot with no node and no context: its only record. */
+  final case class Empty(snap: String) extends Snap {
+    def serial: Int = 0; def size: Int = 1
+  }
   /** A sweep at `nowMillis` of one route (`only`) or of all: it expired
     * nodes by TTL at that time, then fired the pending nodes listed as
     * (route, first receipt path) — a route never holds two pending nodes
@@ -189,13 +214,14 @@ private[routing] object WalRecord {
   private def decReceipts(fs: Seq[String]): List[Receipt] =
     fs.iterator.map(f => (f.substring(1), f.charAt(0) == 'b')).toList
 
-  def node(snap: String, serial: Int, routeId: String, createdAtMillis: Long,
-           receipts: List[Receipt]): String =
-    enc(Seq("n", snap, serial.toString, routeId, createdAtMillis.toString) ++
-      encReceipts(receipts))
-  def fired(snap: String, serial: Int, routeId: String,
-            receipts: List[Receipt]): String =
-    enc(Seq("x", snap, serial.toString, routeId) ++ encReceipts(receipts))
+  def node(snap: String, serial: Int, size: Int, routeId: String,
+           createdAtMillis: Long, receipts: List[Receipt]): String =
+    enc(Seq("n", snap, serial.toString, size.toString, routeId,
+      createdAtMillis.toString) ++ encReceipts(receipts))
+  def fired(snap: String, serial: Int, size: Int, routeId: String,
+            receipts: List[Receipt], dropped: Boolean): String =
+    enc(Seq(if (dropped) "d" else "x", snap, serial.toString, size.toString,
+      routeId) ++ encReceipts(receipts))
   def empty(snap: String): String = enc(Seq("s", snap))
   def swept(nowMillis: Long, only: Option[String],
             fired: Seq[(String, String)]): String =
@@ -209,10 +235,10 @@ private[routing] object WalRecord {
     else {
       val f = payload.substring(1).split(Sep.toString, -1).map(unescF).toSeq
       try f match {
-        case Seq("n", snap, _, route, at, rs @ _*) if rs.nonEmpty =>
-          Some(Node(snap, route, at.toLong, decReceipts(rs)))
-        case Seq("x", snap, _, route, rs @ _*) if rs.nonEmpty =>
-          Some(Fired(snap, route, decReceipts(rs)))
+        case Seq("n", snap, i, n, route, at, rs @ _*) if rs.nonEmpty =>
+          Some(Node(snap, i.toInt, n.toInt, route, at.toLong, decReceipts(rs)))
+        case Seq(k @ ("x" | "d"), snap, i, n, route, rs @ _*) if rs.nonEmpty =>
+          Some(Fired(snap, i.toInt, n.toInt, route, decReceipts(rs), k == "d"))
         case Seq("s", snap) => Some(Empty(snap))
         case Seq("w", now, only, fired @ _*) if fired.length % 2 == 0 =>
           Some(Swept(now.toLong, if (only.isEmpty) None else Some(only.substring(1)),
@@ -282,35 +308,38 @@ final class RoutingCheckpoint(path: String, conf: Configuration)
 
   /** Replace the log with one snapshot segment holding `events` (last
     * occurrence per payload) and the distinct `completed` set, and drop the
-    * older segments. The table's folds pass their [[WalRecord]] snapshot
-    * as `events`. */
+    * older segments and any `tmp-` remnant of an earlier crashed
+    * compaction. The snapshot appears under its name only once written
+    * whole ([[WalCodec.publish]]). The table's folds pass their
+    * [[WalRecord]] snapshot as `events`. */
   def compact(events: Seq[(String, Boolean)], completed: Seq[String]): Unit =
     synchronized {
       if (!fs.exists(dir)) return
-      val old = fs.listStatus(dir).map(_.getPath)
-        .filter(_.getName.startsWith("wal-"))
+      val listed = fs.listStatus(dir).map(_.getPath)
+      val old = listed.filter(_.getName.startsWith("wal-"))
       close() // the snapshot becomes the new open segment's predecessor
-      // The snapshot must sort AFTER every segment it subsumes (so a
-      // survivor of a partial deletion folds first and is overridden by
-      // the snapshot's last-per-path state) and BEFORE every future live
-      // segment (record()'s minNextTs floor guarantees new segments get
-      // ts > tsMax even on a same-millisecond clock). "zzzzzzzz" sorts
-      // after any same-ts hex-uuid segment; the trailing wall-clock +
-      // uuid keep repeated same-tsMax snapshots ordered and unique.
+      // The snapshot must sort AFTER every segment it subsumes (replay
+      // restores the newest complete snapshot and skips everything before
+      // it, so a survivor of a partial deletion is ignored) and BEFORE
+      // every future live segment (record()'s minNextTs floor guarantees
+      // new segments get ts > tsMax even on a same-millisecond clock).
+      // "zzzzzzzz" sorts after any same-ts hex-uuid segment; the trailing
+      // wall-clock + uuid keep repeated same-tsMax snapshots ordered and
+      // unique.
       val tsMax = old.map(p => tsOf(p.getName)).foldLeft(0L)(math.max)
       val name = f"wal-$tsMax%013d-zzzzzzzz-${System.currentTimeMillis()}%013d-${
         java.util.UUID.randomUUID().toString.take(8)}.log"
-      val snap = new Path(dir, name)
-      val out = fs.create(snap, true)
-      try WalCodec.writeState(out, events, completed) finally out.close()
+      WalCodec.publish(fs, dir, name)(WalCodec.writeState(_, events, completed))
       minNextTs = math.max(minNextTs, tsMax + 1)
-      val survived = old.filter(f => !fs.delete(f, false) && fs.exists(f))
+      val stale = old ++ listed.filter(_.getName.startsWith("tmp-"))
+      val survived = stale.filter(f => !fs.delete(f, false) && fs.exists(f))
       if (survived.nonEmpty) {
         // KEEP the snapshot: once any old segment was deleted it holds
         // the only durable copy of that segment's events (withdrawing it
         // here would lose them — the pre-r13 defect). Survivors are
-        // harmless — they sort before the snapshot, so its state wins
-        // the fold — and are re-deleted on the next compaction.
+        // harmless — they sort before the snapshot, which replay restores
+        // whole, and a `tmp-` file is never read — and are re-deleted on
+        // the next compaction.
         org.slf4j.LoggerFactory.getLogger(classOf[RoutingCheckpoint]).warn(
           s"checkpoint $dir: could not delete segment(s) " +
             s"${survived.map(_.getName).mkString(", ")}; snapshot kept " +

@@ -244,10 +244,13 @@ final class RoutingTable(probe: PathProbe,
   private var recordsKept = 0
 
   /** A fired context awaiting settlement: the route and receipts of the
-    * node that fired it, and the output paths not yet named complete. */
+    * node that fired it, the output paths not yet named complete, and
+    * whether a recovery dropped it as done (see [[recover]]). */
   private final class Fired(val routeId: String,
                             val receipts: List[(String, Boolean)],
-                            var open: Set[String])
+                            var open: Set[String]) {
+    var dropped = false
+  }
   /** Unsettled contexts in firing order, and by each open output path.
     * Two firings of one node state (route and receipts) are one entry:
     * one execution to re-offer. */
@@ -256,6 +259,8 @@ final class RoutingTable(probe: PathProbe,
     scala.collection.mutable.HashMap.empty[String, List[Fired]]
   /** While [[recover]] runs: every context it fired, by ledger entry. */
   private var recovering: scala.collection.mutable.LinkedHashMap[Fired, ExecutionContext] = _
+  /** While [[replay]] re-fires a snapshot context: its dropped flag. */
+  private var restoringDropped = false
   /** While a sweep runs with a WAL: (route, first path) of each node it
     * fired. */
   private var sweepFired: scala.collection.mutable.ListBuffer[(String, String)] = _
@@ -270,7 +275,10 @@ final class RoutingTable(probe: PathProbe,
       f.open.foreach(p => unsettledByPath(p) = f :: unsettledByPath.getOrElse(p, Nil))
       f
     }
-    if (recovering != null) recovering.getOrElseUpdate(f, c)
+    if (recovering != null) {
+      recovering.getOrElseUpdate(f, c)
+      f.dropped ||= restoringDropped
+    }
     if (sweepFired != null) n.firstPath.foreach(p => sweepFired += ((route.id, p)))
   }
 
@@ -280,6 +288,16 @@ final class RoutingTable(probe: PathProbe,
       f.open -= key
       if (f.open.isEmpty) unsettled -= f
     })
+
+  /** `key`, an open output path of `f`, was named complete. */
+  private def settleIn(f: Fired, key: String): Unit = {
+    f.open -= key
+    if (f.open.isEmpty) unsettled -= f
+    unsettledByPath.get(key).foreach { fs =>
+      val rest = fs.filterNot(_ eq f)
+      if (rest.isEmpty) unsettledByPath.remove(key) else unsettledByPath(key) = rest
+    }
+  }
 
   private def dropUnsettled(f: Fired): Unit = {
     unsettled -= f
@@ -291,8 +309,8 @@ final class RoutingTable(probe: PathProbe,
     }
   }
 
-  /** Contexts fired and not yet settled, as (route, output paths). */
-  def unsettledContexts: List[(String, Set[String])] = synchronized {
+  /** Contexts fired and not yet settled, as (route, open output paths). */
+  private[routing] def unsettledContexts: List[(String, Set[String])] = synchronized {
     unsettled.iterator.map(f => (f.routeId, f.open)).toList
   }
 
@@ -398,12 +416,15 @@ final class RoutingTable(probe: PathProbe,
   private def fold(): Unit = {
     checkpoint.foreach { cp =>
       val snap = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+      val size = routes.iterator.map(_.pendingNodes.length).sum + unsettled.size
       val recs = scala.collection.mutable.ListBuffer.empty[(String, Boolean)]
       routes.foreach(r => r.pendingNodes.foreach { n =>
-        recs += ((WalRecord.node(snap, recs.length, r.id, n.createdAtMillis, n.receipts), false))
+        recs += ((WalRecord.node(snap, recs.length, size, r.id, n.createdAtMillis,
+          n.receipts), false))
       })
       unsettled.foreach { f =>
-        recs += ((WalRecord.fired(snap, recs.length, f.routeId, f.receipts), false))
+        recs += ((WalRecord.fired(snap, recs.length, size, f.routeId, f.receipts,
+          f.dropped), false))
       }
       recordsKept = recs.length
       if (recs.isEmpty) recs += ((WalRecord.empty(snap), false))
@@ -416,11 +437,14 @@ final class RoutingTable(probe: PathProbe,
     * reload) and return the contexts to re-offer: the executions that were
     * mid-flight when the previous driver died.
     *
-    * Restores the newest snapshot — each pending node rebuilt in its own
-    * route from its receipts, each unsettled context re-fired from the
-    * node that fired it — then replays the log after the snapshot through
-    * the normal receive path, with the sweeps' logged expiries and
-    * firings. A log without a snapshot replays whole. Finally folds.
+    * Restores the newest complete snapshot — each pending node rebuilt in
+    * its own route from its receipts, each unsettled context re-fired from
+    * the node that fired it — then replays the log after the snapshot
+    * through the normal receive path, with the sweeps' logged expiries and
+    * firings. A snapshot cut short by a crash (its last record missing) is
+    * ignored: the log it would have replaced is still there, so recovery
+    * uses the snapshot before it, or replays a log without one whole.
+    * Finally folds.
     *
     * A fired context whose output is COMPLETE (every materialized path —
     * a crash after the first partition of a ranged output must re-surface
@@ -428,8 +452,16 @@ final class RoutingTable(probe: PathProbe,
     * unless `staleOutput` proves it STALE: an input re-published with a
     * newer completion stamp before the crash, where dropping it would
     * silently lose the recompute (routing has only an exists-probe —
-    * stamping lives at the app layer). A dropped context stays unsettled
-    * until the completed set names its outputs. */
+    * stamping lives at the app layer). A dropped context is settled once
+    * the completed set names its outputs or, failing that, by the next
+    * recovery that drops it: its output may have landed with no
+    * `markComplete` (the driver died in between), so nothing else would
+    * ever settle it, yet a recovery by a caller without a staleness check
+    * must leave a later one the chance to re-offer it. A re-offered
+    * context whose output is not complete is settled for the output
+    * paths the completed set names. A STALE one keeps all its outputs
+    * open: its re-execution names them, and a crash before that re-offers
+    * it again. */
   def recover(staleOutput: ExecutionContext => Boolean = _ => false)
       : List[ExecutionContext] = synchronized {
     checkpoint.flatMap(_.load()).map { case (log, completed) =>
@@ -441,12 +473,14 @@ final class RoutingTable(probe: PathProbe,
       finally { replaying = false; recovering = null }
       lazy val named: Set[String] = completed.iterator.flatMap(p => p :: parentOf(p).toList).toSet
       val offered = fired.toList.filter { case (f, c) =>
-        val done = c.output.materializedPaths.nonEmpty &&
-          c.output.materializedPaths.forall(p =>
-            cachingProbe.isComplete(p, c.output.source.protocol)) &&
-          !staleOutput(c)
-        if (done && f.open.forall(named)) dropUnsettled(f)
-        !done
+        val outs = c.output.materializedPaths
+        val complete = outs.nonEmpty &&
+          outs.forall(p => cachingProbe.isComplete(p, c.output.source.protocol))
+        val stale = complete && staleOutput(c)
+        if (complete && !stale) {
+          if (f.dropped || f.open.forall(named)) dropUnsettled(f) else f.dropped = true
+        } else if (!stale) f.open.filter(named).foreach(settleIn(f, _))
+        !complete || stale
       }
       fold() // bound the log across restarts
       offered.map(_._2)
@@ -454,21 +488,20 @@ final class RoutingTable(probe: PathProbe,
   }
 
   private def replay(log: IndexedSeq[(String, Boolean)]): Unit = {
-    // the newest snapshot's records end at the last snapshot record;
-    // everything before its first record is subsumed by it
+    // the newest complete snapshot: its last record, preceded by the
+    // size - 1 others. Everything before it is subsumed by it; last = -1
+    // when there is none: replay the whole log
     var last = log.length - 1
-    var snap: String = null
-    while (snap == null && last >= 0) {
+    var records = IndexedSeq.empty[WalRecord.Snap]
+    while (records.isEmpty && last >= 0) {
       WalRecord.parse(log(last)._1) match {
-        case Some(r: WalRecord.Snap) => snap = r.snap
+        case Some(r: WalRecord.Snap) if r.serial == r.size - 1 && r.size <= last + 1 =>
+          val recs = (last + 1 - r.size to last).flatMap(i =>
+            WalRecord.parse(log(i)._1).collect { case s: WalRecord.Snap if s.snap == r.snap => s })
+          if (recs.length == r.size) records = recs else last -= 1
         case _ => last -= 1
       }
     }
-    var first = last
-    while (first > 0 && (WalRecord.parse(log(first - 1)._1) match {
-      case Some(r: WalRecord.Snap) => r.snap == snap
-      case _ => false
-    })) first -= 1
     val byId = routes.iterator.map(r => r.id -> r).toMap
     val decoded = scala.collection.mutable.HashMap.empty[String, List[Signal]]
     def rebuild(r: Route, createdAtMillis: Long,
@@ -481,19 +514,19 @@ final class RoutingTable(probe: PathProbe,
       n
     }
     val restored = scala.collection.mutable.LinkedHashMap.empty[Route, Vector[RuntimeLinkNode]]
-    if (snap != null) (first to last).foreach { i =>
-      WalRecord.parse(log(i)._1) match {
-        case Some(WalRecord.Node(_, id, at, receipts)) => byId.get(id).foreach { r =>
-          val n = rebuild(r, at, receipts)
-          if (!n.isZombie && n.ready.nonEmpty)
-            restored(r) = restored.getOrElse(r, Vector.empty) :+ n
-        }
-        case Some(WalRecord.Fired(_, id, receipts)) => byId.get(id).foreach { r =>
-          val n = rebuild(r, System.currentTimeMillis(), receipts)
-          if (!n.isZombie && n.allSignalsReady) r.fire(n, cachingProbe)
-        }
-        case _ => ()
+    records.foreach {
+      case WalRecord.Node(_, _, _, id, at, receipts) => byId.get(id).foreach { r =>
+        val n = rebuild(r, at, receipts)
+        if (!n.isZombie && n.ready.nonEmpty)
+          restored(r) = restored.getOrElse(r, Vector.empty) :+ n
       }
+      case WalRecord.Fired(_, _, _, id, receipts, dropped) => byId.get(id).foreach { r =>
+        val n = rebuild(r, System.currentTimeMillis(), receipts)
+        restoringDropped = dropped
+        try if (!n.isZombie && n.allSignalsReady) r.fire(n, cachingProbe)
+        finally restoringDropped = false
+      }
+      case WalRecord.Empty(_) => ()
     }
     restored.foreach { case (r, ns) => r.restore(ns) }
     ((last + 1) until log.length).foreach { i =>

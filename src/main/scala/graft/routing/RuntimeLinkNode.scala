@@ -95,7 +95,7 @@ final class RuntimeLinkNode(
   def receipts: List[(String, Boolean)] = receiptsRev.reverse
 
   /** Paths this node holds blocked. */
-  def blocked: Set[String] = blockedPaths.toSet
+  private[routing] def blocked: Set[String] = blockedPaths.toSet
 
   /** The path that created this node (its first receipt). */
   def firstPath: Option[String] = receiptsRev.lastOption.map(_._1)

@@ -689,15 +689,19 @@ final class EpochWal(shardDir: String, conf: Configuration, val epoch: Long,
           "higher-epoch snapshot exists (this owner is fenced out)")
         return
       }
+      // a `tmp-` remnant of a crashed compaction at an epoch <= this one
+      // is deleted with the segments; load() never reads one
       val old = parsed(listNames("wal-") ++ listNames("snap-"))
-        .filter(_._2 <= epoch).map(_._1)
+        .filter(_._2 <= epoch).map(_._1) ++
+        listNames("tmp-").filter(n => epochOf(n.stripPrefix("tmp-")).exists(_ <= epoch))
       close() // own open segment is among the deletions below
       // nextTs(): the snapshot's ts must strictly exceed every segment it
       // subsumes AND lower-bound every post-snapshot segment — load()'s
-      // (epoch, ts) subsumption rule depends on it
+      // (epoch, ts) subsumption rule depends on it. Published whole: load()
+      // trusts the newest snapshot and skips the segments it subsumes, so a
+      // torn one under its name would lose them.
       val name = f"snap-$epoch%09d-${nextTs()}%013d.log"
-      val out = fs.create(new Path(dir, name), true)
-      try WalCodec.writeState(out, events, completed) finally out.close()
+      WalCodec.publish(fs, dir, name)(WalCodec.writeState(_, events, completed))
       val survived = old.filter { n =>
         val p = new Path(dir, n)
         // a THROWING delete (transient store RPC failure) must count as

@@ -76,13 +76,15 @@ class RecoveryLawSuite extends AnyFunSuite {
     def exists(p: String): Boolean = landed.contains(p)
   }
 
-  /** Counts folds, so a check can land right after one. */
+  /** Counts folds, so a check can land right after one, and runs
+    * `beforeFold` as each fold starts. */
   private final class CountingWal(u: RoutingWal) extends RoutingWal {
     var folds = 0
+    var beforeFold: () => Unit = () => ()
     def appendEvent(p: String, blocked: Boolean): Unit = u.appendEvent(p, blocked)
     def appendCompleted(p: String): Unit = u.appendCompleted(p)
     def compact(events: Seq[(String, Boolean)], completed: Seq[String]): Unit = {
-      folds += 1; u.compact(events, completed)
+      beforeFold(); folds += 1; u.compact(events, completed)
     }
     def load(): Option[(List[(String, Boolean)], List[String])] = u.load()
     def close(): Unit = u.close()
@@ -354,6 +356,108 @@ class RecoveryLawSuite extends AnyFunSuite {
     t2.disposeWal()
   }
 
+  test("a snapshot cut short by a crash is not restored: the log it would replace recovers") {
+    val dir = tmpDir("graft_law_torn")
+    def f(name: String) = new java.io.File(s"$dir/$name")
+    val probe = new MemProbe
+    val wal = new CountingWal(CheckpointKind.open(f("live").getPath))
+    // keep the log as each fold finds it
+    wal.beforeFold = () => {
+      org.apache.commons.io.FileUtils.deleteQuietly(f("pre"))
+      org.apache.commons.io.FileUtils.copyDirectory(f("live"), f("pre"))
+    }
+    val t = joinTable(wal, probe, n = 4)
+    // fold 1 after four events (nodes d2, d3 and the day-1 firing), fold 2
+    // after four more, with the day-2 firing and nodes d3..d6 in its snapshot
+    val fired = Seq((0, 1), (0, 2), (1, 1), (0, 3), (0, 4), (0, 5), (1, 2), (0, 6))
+      .flatMap { case (s, d) => t.receivePath(s"${src(s)}/${day(d)}") }
+    assert(wal.folds == 2 && fired.length == 2)
+    val segs = f("live/routing_state.json.d").listFiles().filter(_.getName.startsWith("wal-"))
+    assert(segs.length == 1)
+    val snap = java.nio.file.Files.readAllBytes(segs.head.toPath)
+    val lines = new String(snap, "UTF-8").split('\n')
+    assert(lines.length == 6) // four nodes, two contexts
+    // a crash mid-write leaves the snapshot cut inside its second node
+    // record under its own name (a store that tears it), or whole under
+    // its `tmp-` name (a crash before the rename)
+    val torn = lines(0).length + 1 + lines(1).length / 2
+    Seq(segs.head.getName -> snap.take(torn), s"tmp-${segs.head.getName}" -> snap)
+      .zipWithIndex.foreach { case ((name, bytes), k) =>
+        val crash = f(s"crash$k")
+        org.apache.commons.io.FileUtils.copyDirectory(f("pre"), crash)
+        java.nio.file.Files.write(
+          new java.io.File(crash, s"routing_state.json.d/$name").toPath, bytes)
+        val t2 = joinTable(CheckpointKind.open(crash.getPath), probe, n = 4)
+        val again = t2.recover()
+        assert(nodes(t2, withTime = false) == nodes(t, withTime = false),
+          s"$name: pending nodes lost")
+        assert(again.map(_.output.materializedPaths).toSet ==
+          fired.map(_.output.materializedPaths).toSet, s"$name: fired contexts lost")
+        assert(t2.unsettledContexts.toSet == t.unsettledContexts.toSet)
+        t2.disposeWal()
+        // recovery's own fold replaced the log, the remnant included
+        assert(new java.io.File(crash, "routing_state.json.d").list().toSeq
+          .count(_.startsWith("wal-")) == 1)
+        assert(!new java.io.File(crash, s"routing_state.json.d/tmp-${segs.head.getName}").exists)
+      }
+    t.disposeWal()
+  }
+
+  test("a context whose output landed unmarked is settled by the second recovery that drops it") {
+    val dir = tmpDir("graft_law_landed")
+    val probe = new MemProbe
+    val t = joinTable(CheckpointKind.open(dir), probe, 1 << 20)
+    t.receivePath(s"${src(0)}/${day(1)}")
+    val ctxs = t.receivePath(s"${src(1)}/${day(1)}")
+    assert(ctxs.length == 1)
+    // the output reaches storage; the driver dies before markComplete
+    probe.landed += s"${ctxs.head.output.materializedPaths.head}/_SUCCESS"
+    t.disposeWal()
+    // each recovery drops it as done; the first keeps it for a later
+    // staleness check, the second settles it
+    val unsettled = (1 to 3).map { _ =>
+      val t2 = joinTable(CheckpointKind.open(dir), probe, 1 << 20)
+      assert(t2.recover().isEmpty, "a done context was re-offered")
+      try t2.unsettledContexts.length finally t2.disposeWal()
+    }
+    assert(unsettled == Seq(1, 0, 0))
+  }
+
+  test("recovery settles the output partitions of a re-offered context that were named") {
+    // n = 2: the contexts are in a snapshot; otherwise the log holds events only
+    Seq(2, 1 << 20).foreach { n =>
+      val dir = tmpDir("graft_law_partial")
+      val probe = new MemProbe
+      def mk() = {
+        val t = new RoutingTable(probe, Some(CheckpointKind.open(dir)), n)
+        val r = route("rr", ttl = false, "p:0")
+        // each execution writes a two-day output range
+        val out = Signal("rr", SignalSource.internal(appRoot, "rr"), daySpec,
+          DimFilter.allPassFor(daySpec).chain(
+            DimFilter.loadRaw(daySpec, DimFilter.RawFilter.chainOf("_:-2"))).get)
+        t.add(new Route("rr", r.linkNode, out, Nil, Long.MaxValue)); t
+      }
+      val t = mk()
+      val first = t.receivePath(s"${src(0)}/${day(3)}")
+      assert(first.length == 1 && first.head.output.materializedPaths.length == 2)
+      // one partition of the first range lands and is named; then the crash
+      val head = s"${outRoot("rr")}/${day(3)}"
+      probe.landed += s"$head/_SUCCESS"
+      t.markComplete(Seq(head))
+      assert(t.receivePath(s"${src(0)}/${day(5)}").length == 1)
+      val live = t.unsettledContexts.toSet
+      assert(live.contains(("rr", Set(s"${outRoot("rr")}/${day(2)}"))))
+      t.disposeWal()
+      val t2 = mk()
+      assert(t2.recover().length == 2)
+      assert(t2.unsettledContexts.toSet == live, s"n=$n")
+      // the re-execution names only the partition it had left to write
+      t2.markComplete(Seq(s"${outRoot("rr")}/${day(2)}"))
+      assert(t2.unsettledContexts.toSet == live.filterNot(_._2.contains(s"${outRoot("rr")}/${day(2)}")))
+      t2.disposeWal()
+    }
+  }
+
   test("fired-then-completed contexts leave nothing unsettled") {
     val dir = tmpDir("graft_law_settle")
     val probe = new PathProbe { def exists(p: String) = true }
@@ -389,10 +493,11 @@ class RecoveryLawSuite extends AnyFunSuite {
 
   test("snapshot records round-trip through the codec") {
     val rs = List(("/a/%00\u0000x\tz", true), ("/b/2024-01-01", false))
-    assert(WalRecord.parse(WalRecord.node("s1", 3, "r%\u0000", 42L, rs)) ==
-      Some(WalRecord.Node("s1", "r%\u0000", 42L, rs)))
-    assert(WalRecord.parse(WalRecord.fired("s1", 4, "r", rs)) ==
-      Some(WalRecord.Fired("s1", "r", rs)))
+    assert(WalRecord.parse(WalRecord.node("s1", 3, 5, "r%\u0000", 42L, rs)) ==
+      Some(WalRecord.Node("s1", 3, 5, "r%\u0000", 42L, rs)))
+    Seq(false, true).foreach(d =>
+      assert(WalRecord.parse(WalRecord.fired("s1", 4, 5, "r", rs, d)) ==
+        Some(WalRecord.Fired("s1", 4, 5, "r", rs, d))))
     assert(WalRecord.parse(WalRecord.empty("s2")) == Some(WalRecord.Empty("s2")))
     assert(WalRecord.parse(WalRecord.swept(7L, None, Nil)) ==
       Some(WalRecord.Swept(7L, None, Nil)))
