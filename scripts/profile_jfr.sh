@@ -9,12 +9,18 @@
 # Every JVM of the run writes the same file; the workload's JVM exits last,
 # so the recording is the workload's. Then prints, from `jfr print`, the top
 # self frames and the top inclusive graft.* frames of the `main` thread's
-# execution samples, and the number of child processes the JVM started
-# (jdk.ProcessStart).
+# execution samples, the number of child processes the JVM started
+# (jdk.ProcessStart), and the main-thread samples by phase. A sample's
+# phase is the outermost routing entry on its stack: RoutingTable
+# `recover`, `sweepPending` (or `sweepPendingRoute`), `markComplete`, or
+# `receivePath` (or a signal's `receive`); a sample under none of them is
+# `set-up/other` (JVM start, declaring routes, Spark, the harness). So the
+# log tail that `recover` replays through `receivePath` counts as recover,
+# and the warm-up round's live work counts in the live phases.
 set -euo pipefail
 
 if [ $# -lt 2 ]; then
-  sed -n '2,13p' "$0" | sed 's/^# \{0,1\}//' >&2
+  sed -n '2,19p' "$0" | sed 's/^# \{0,1\}//' >&2
   exit 2
 fi
 workload=$1 seed=$2
@@ -59,10 +65,28 @@ for s in samples:
     incl_n.update({f for f in frames
                    if f.startswith("graft.") and "$$Lambda" not in f and "$anonfun$" not in f})
 
+PHASES = {
+    "graft.routing.RoutingTable.recover": "recover",
+    "graft.routing.RoutingTable.sweepPending": "sweepPending",
+    "graft.routing.RoutingTable.sweepPendingRoute": "sweepPending",
+    "graft.routing.RoutingTable.markComplete": "markComplete",
+    "graft.routing.RoutingTable.receivePath": "receivePath",
+    "graft.routing.RoutingTable.receive": "receivePath",
+}
+phase_n = collections.Counter()
+for s in samples:
+    frames = [name(f) for f in (s.get("stackTrace") or {}).get("frames", [])]
+    # frames run innermost first: the last entry frame is the outermost
+    phase = next((PHASES[f] for f in reversed(frames) if f in PHASES), "set-up/other")
+    phase_n[phase] += 1
+
 n = len(samples)
 print(f"main-thread samples: {n} ({truncated} truncated stacks); jdk.ProcessStart: {starts}")
 for title, counts in (("top self frames", self_n), ("top inclusive graft.* frames", incl_n)):
     print(title)
     for f, c in counts.most_common(15):
         print(f"  {c:6d} {100.0 * c / max(n, 1):5.1f}%  {f}")
+print("samples by phase (outermost routing entry)")
+for p in ("receivePath", "sweepPending", "markComplete", "recover", "set-up/other"):
+    print(f"  {phase_n[p]:6d} {100.0 * phase_n[p] / max(n, 1):5.1f}%  {p}")
 EOF

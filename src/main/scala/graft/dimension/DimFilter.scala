@@ -126,21 +126,9 @@ object DimFilter {
                                         finalize: Boolean): DimFilter = {
     val resultNodes = scala.collection.mutable.LinkedHashMap.empty[String, (DimValue, DimFilter)]
     for ((rv, rSub) <- right.nodes) {
-      val block = left.nodes.filter { case (lv, _) =>
-        lv.typeCompatible(rv) &&
-          (lv.name.isEmpty || rv.name.isEmpty || lv.name == rv.name)
-      }
+      val block = left.nodes.filter { case (lv, _) => levelCompatible(lv, rv) }
       for ((lv, lSub) <- block) {
-        val applied: Option[List[DimValue]] =
-          try lv.applyTo(rv, finalize)
-          catch {
-            // deliberate misuse diagnostics (finalize of relative vs
-            // relative) must SURFACE — swallowing them turned
-            // programming errors into silent non-matches
-            case e: IllegalStateException => throw e
-            case scala.util.control.NonFatal(_) => None // value incompat
-          }
-        applied.foreach { survivors =>
+        applyValue(lv, rv, finalize).foreach { survivors =>
           val newSub: Option[DimFilter] =
             if (lSub.isEmpty || rSub.isEmpty) Some(DimFilter.empty) // leaf
             else {
@@ -167,9 +155,28 @@ object DimFilter {
     DimFilter(resultNodes.values.toList)
   }
 
+  /** May declared value `lv` meet incoming value `rv` at one level:
+    * types compatible, and names equal where both are named. */
+  private[dimension] def levelCompatible(lv: DimValue, rv: DimValue): Boolean =
+    lv.typeCompatible(rv) &&
+      (lv.name.isEmpty || rv.name.isEmpty || lv.name == rv.name)
+
+  /** `lv.applyTo(rv)` as chaining uses it: a value incompatibility is no
+    * match (None). */
+  private[dimension] def applyValue(lv: DimValue, rv: DimValue,
+                                    finalize: Boolean): Option[List[DimValue]] =
+    try lv.applyTo(rv, finalize)
+    catch {
+      // deliberate misuse diagnostics (finalize of relative vs
+      // relative) must SURFACE — swallowing them turned
+      // programming errors into silent non-matches
+      case e: IllegalStateException => throw e
+      case scala.util.control.NonFatal(_) => None // value incompat
+    }
+
   /** Recursive union of two filters' branches, deduped by canonical
     * value per level (subtrees of equal values merge the same way). */
-  private def mergeByValue(a: DimFilter, b: DimFilter): DimFilter = {
+  private[dimension] def mergeByValue(a: DimFilter, b: DimFilter): DimFilter = {
     if (b.isEmpty) return a
     if (a.isEmpty) return b
     val out = scala.collection.mutable.LinkedHashMap.empty[String, (DimValue, DimFilter)]

@@ -12,7 +12,10 @@ final case class DimSpec(nodes: List[(Dim, DimSpec)]) {
   /** Depth-first flatten → ordered dimension list (reference
     * get_flattened_dimension_map, dimension_constructs.py:242-265). Specs
     * are single-branch in practice (each level has one *declared* dim). */
-  def flatten: List[Dim] = nodes.flatMap { case (d, sub) => d :: sub.flatten }
+  lazy val flatten: List[Dim] = nodes.flatMap { case (d, sub) => d :: sub.flatten }
+
+  /** Names of the flattened dims (unnamed dims skipped). */
+  lazy val flatNames: List[String] = flatten.flatMap(_.name)
 
   def find(name: String): Option[Dim] = flatten.find(_.name.contains(name))
 

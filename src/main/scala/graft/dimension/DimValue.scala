@@ -70,7 +70,7 @@ sealed trait DimValue {
   def matchesValue(other: DimValue): Boolean = value == other.value
 
   def typeCompatible(other: DimValue): Boolean =
-    dtype.isEmpty || other.dtype.isEmpty || dtype == other.dtype
+    dtype.isEmpty || other.dtype.isEmpty || dtype.get == other.dtype.get
 
   /** One-directional apply (self=LHS pattern, other=RHS value); None means
     * "no opinion, ask the other side". Reference `_apply`. */
@@ -84,10 +84,16 @@ sealed trait DimValue {
   final def applyTo(other: DimValue, finalize: Boolean): Option[List[DimValue]] = {
     val res = applyOneWay(other, finalize).orElse(other.applyOneWay(this, finalize))
     res.map(_.map { r =>
-      r.withAttrs(
-        r.name.orElse(this.name),
-        r.dtype.orElse(this.dtype),
-        if (r.params.isEmpty) this.params else r.params ++ this.params)
+      val n = r.name.orElse(this.name)
+      val t = r.dtype.orElse(this.dtype)
+      val p =
+        if (r.params.isEmpty) this.params
+        else if (this.params.isEmpty || (r.params eq this.params)) r.params
+        else r.params ++ this.params
+      // a survivor whose attributes already are the merged ones IS its own
+      // copy (values are immutable case classes); skipping the copy skips
+      // re-formatting every date an event or a range carries
+      if (n == r.name && t == r.dtype && p == r.params) r else r.withAttrs(n, t, p)
     })
   }
 
@@ -151,8 +157,11 @@ object DimValue {
   private val formatters =
     new java.util.concurrent.ConcurrentHashMap[String, DateTimeFormatter]()
 
-  def formatterFor(fmt: String): DateTimeFormatter =
-    formatters.computeIfAbsent(fmt, f => DateTimeFormatter.ofPattern(strftimeToJava(f)))
+  def formatterFor(fmt: String): DateTimeFormatter = {
+    val f = formatters.get(fmt)
+    if (f != null) f
+    else formatters.computeIfAbsent(fmt, f => DateTimeFormatter.ofPattern(strftimeToJava(f)))
+  }
 
   /** The parse side of a declared format: `lenient` defaults the
     * time-of-day fields to 0, so partial formats (e.g. "%Y-%m-%d %H")
@@ -382,7 +391,11 @@ final case class DateValue(date: LocalDateTime, name: Option[String] = None,
     case _ =>
   }
 
-  override val value: String =
+  // the formatter is looked up eagerly, so a format java.time rejects
+  // fails here; the text is rendered on first use — many values (a range
+  // expanded for a zombie check, a re-resolved tip) never print
+  format.foreach(DimValue.formatterFor)
+  override lazy val value: String =
     format.map(f => date.format(DimValue.formatterFor(f))).getOrElse(date.toString)
   override def rawValue: Any = date
 
@@ -410,9 +423,9 @@ final case class DateValue(date: LocalDateTime, name: Option[String] = None,
       // (19:00 PST) != (19:00 UTC) despite equal wall-clock text, so the
       // naive comparisons must NOT be consulted as a fallback
       if (timezone.isDefined && d.timezone.isDefined) instant == d.instant
-      else value == d.value || date == d.date ||
+      else date == d.date || value == d.value ||
         // d's date in OUR format; under the same format that is d.value
-        format.exists(f => !d.format.contains(f) &&
+        format.exists(f => (d.format.isEmpty || d.format.get != f) &&
           value == d.date.format(DimValue.formatterFor(f)))
     case _ => false
   }

@@ -78,9 +78,10 @@ final class Route(
     if (n > 0) ctrs = ctrs.copy(probeFailures = ctrs.probeFailures + n)
 
   /** Does an incoming concrete signal belong to any of this route's inputs? */
-  def accepts(incoming: Signal): Boolean =
-    linkNode.signals.exists(s => !s.isReference && s.sameResource(incoming) &&
-      s.applyEvent(incoming).isDefined)
+  def accepts(incoming: Signal): Boolean = accepts(Offer.of(incoming))
+
+  private[routing] def accepts(o: Offer): Boolean =
+    linkNode.signals.exists(s => !s.isReference && o.candidate(s).isDefined)
 
   /** Offer a signal: feed pending nodes; un-consumed non-reference signals
     * open a new pending node. Ready nodes become ExecutionContexts and leave
@@ -88,7 +89,12 @@ final class Route(
     * routing_runtime_constructs.py:1396-1444. */
   def receive(incoming: Signal, probe: PathProbe,
               nowMillis: Long = System.currentTimeMillis(),
-              isBlocked: Boolean = false): List[ExecutionContext] = {
+              isBlocked: Boolean = false): List[ExecutionContext] =
+    receiveOffer(Offer.of(incoming), probe, nowMillis, isBlocked)
+
+  /** [[receive]] of an event whose candidates the caller shares. */
+  private[routing] def receiveOffer(incoming: Offer, probe: PathProbe, nowMillis: Long,
+                                    isBlocked: Boolean): List[ExecutionContext] = {
     expireNodes(nowMillis)
     ctrs = ctrs.copy(eventsReceived = ctrs.eventsReceived + 1)
     // only nodes TOUCHED by this event get their (probe-I/O) readiness
@@ -100,13 +106,14 @@ final class Route(
     // re-publish of a node's path counts as touched, so manual re-offer
     // still re-evaluates that node immediately.
     var touched = List.empty[RuntimeLinkNode]
-    pending.foreach { n => if (n.receive(incoming, isBlocked)) touched ::= n }
+    pending.foreach { n => if (n.offer(incoming, isBlocked)) touched ::= n }
 
     if (touched.isEmpty) {
-      val declared = linkNode.signals.find(s => s.sameResource(incoming) && !s.isReference)
-      if (declared.isDefined) {
+      val declared = linkNode.signals.exists(s => !s.isReference &&
+        s.source.kind == incoming.kind && s.source.rootPath == incoming.rootPath)
+      if (declared) {
         val n = new RuntimeLinkNode(linkNode, output, outputLinks, nowMillis)
-        if (n.receive(incoming, isBlocked)) {
+        if (n.offer(incoming, isBlocked)) {
           pending :+= n
           touched ::= n
           ctrs = ctrs.copy(pendingCreated = ctrs.pendingCreated + 1)
@@ -116,28 +123,34 @@ final class Route(
     }
 
     // zombie elimination bounds pending state (reference 547-614)
-    val (zombies, alive) = pending.partition(_.isZombie)
-    zombies.foreach(hooks.onPendingNodeExpired(this, _))
-    pending = alive
-    ctrs = ctrs.copy(zombiesEliminated = ctrs.zombiesEliminated + zombies.length)
+    if (pending.exists(_.isZombie)) {
+      val (zombies, alive) = pending.partition(_.isZombie)
+      zombies.foreach(hooks.onPendingNodeExpired(this, _))
+      pending = alive
+      ctrs = ctrs.copy(zombiesEliminated = ctrs.zombiesEliminated + zombies.length)
+    }
 
     fireReady(probe, touched)
   }
 
-  /** The single firing path (event receive AND sweep): ready CANDIDATES
-    * leave pending, bump the trigger counter, and materialize their
-    * contexts. Only candidates pay the readiness probe I/O. */
+  /** The firing path of an event: the nodes it touched are the only
+    * candidates, and only they pay the readiness probe I/O. */
   private def fireReady(probe: PathProbe,
-                        candidates: List[RuntimeLinkNode]): List[ExecutionContext] = {
-    if (candidates.isEmpty) return Nil
-    // identity membership in O(1): the sweep passes the ENTIRE pending
-    // list as candidates, so a linear exists() here would make every
-    // sweep O(pending²) reference comparisons inside the table monitor
-    val candSet = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[RuntimeLinkNode, java.lang.Boolean]())
-    candidates.foreach(candSet.add)
-    val (ready, waiting) = pending.partition(n =>
-      candSet.contains(n) && n.isReady(probe))
+                        candidates: List[RuntimeLinkNode]): List[ExecutionContext] =
+    if (candidates.isEmpty) Nil
+    else {
+      val candSet = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[RuntimeLinkNode, java.lang.Boolean]())
+      candidates.foreach(candSet.add)
+      fireWhere(probe, candSet.contains)
+    }
+
+  /** The single firing path (event receive AND sweep): candidates that are
+    * ready leave pending, in pending order, bump the trigger counter, and
+    * materialize their contexts. */
+  private def fireWhere(probe: PathProbe,
+                        candidate: RuntimeLinkNode => Boolean): List[ExecutionContext] = {
+    val (ready, waiting) = pending.partition(n => candidate(n) && n.isReady(probe))
     pending = waiting
     ctrs = ctrs.copy(triggers = ctrs.triggers + ready.length)
     ready.map(fire(_, probe))
@@ -184,7 +197,9 @@ final class Route(
             nowMillis: Long = System.currentTimeMillis()): List[ExecutionContext] = {
     expireNodes(nowMillis)
     fireCheckpoints(nowMillis)
-    fireReady(probe, pending) // the sweep re-checks EVERY pending node
+    // only an armed node (every input ready, no zombie) can fire; the
+    // rest wait for events, so the sweep re-checks armed nodes alone
+    fireWhere(probe, _.armed)
   }
 
   /** Fire every not-yet-fired checkpoint mark the node's age has passed,
@@ -207,8 +222,9 @@ final class Route(
     * routing_runtime_constructs.py:1446-1459). */
   def expireNodes(nowMillis: Long): Unit = {
     if (pendingNodeTtlMillis == Long.MaxValue) return
-    val (expired, alive) = pending.partition(n =>
-      nowMillis - n.createdAtMillis > pendingNodeTtlMillis)
+    val stale = (n: RuntimeLinkNode) => nowMillis - n.createdAtMillis > pendingNodeTtlMillis
+    if (!pending.exists(stale)) return
+    val (expired, alive) = pending.partition(stale)
     expired.foreach(hooks.onPendingNodeExpired(this, _))
     pending = alive
     ctrs = ctrs.copy(pendingExpired = ctrs.pendingExpired + expired.length)
@@ -337,7 +353,31 @@ final class RoutingTable(probe: PathProbe,
   // unchanged.
   private var routesBySource =
     Map.empty[(SignalSourceKind, String), List[Route]]
-  private var signalsByRoot = Map.empty[String, List[Signal]]
+  /** Source root → the distinct decoders of the inputs declared under it,
+    * in declaration order. */
+  private var decodersByRoot = Map.empty[String, List[EventDecoder]]
+
+  // Compiled decoders, one per distinct declared input: equal inputs of
+  // different routes (the same alias, source and filter) share one, and
+  // so share each event's candidate; inputs of one spec over one source
+  // share a codec, so an event is parsed once per codec.
+  private val decoderOf = new java.util.IdentityHashMap[Signal, EventDecoder]()
+  private val decoderByInput = scala.collection.mutable.HashMap.empty[Signal, EventDecoder]
+  private val codecs = scala.collection.mutable.HashMap.empty[EventDecoder.Codec, EventDecoder.Codec]
+  // called under the table monitor, by offers of this table's events
+  private val findDecoder: Signal => EventDecoder = { s =>
+    val d = decoderOf.get(s)
+    if (d != null) d else compile(s)
+  }
+
+  private def compile(s: Signal): EventDecoder = {
+    val d = decoderByInput.getOrElseUpdate(s, {
+      val c = EventDecoder.Codec(s)
+      new EventDecoder(s, codecs.getOrElseUpdate(c, c))
+    })
+    decoderOf.put(s, d)
+    d
+  }
 
   def add(route: Route): Unit = synchronized {
     routes :+= route
@@ -349,9 +389,10 @@ final class RoutingTable(probe: PathProbe,
         if (!cur.exists(_ eq route))
           routesBySource = routesBySource.updated(rk, cur :+ route)
       }
+      val d = compile(s)
       val root = s.source.rootPath.stripSuffix("/")
-      signalsByRoot = signalsByRoot.updated(root,
-        signalsByRoot.getOrElse(root, Nil) :+ s)
+      val cur = decodersByRoot.getOrElse(root, Nil)
+      if (!cur.exists(_ eq d)) decodersByRoot = decodersByRoot.updated(root, cur :+ d)
     }
   }
   def all: List[Route] = routes
@@ -370,34 +411,37 @@ final class RoutingTable(probe: PathProbe,
   /** Ingest one concrete event signal; returns ready execution contexts
     * across all matching routes. */
   def receive(incoming: Signal, isBlocked: Boolean = false): List[ExecutionContext] =
-    synchronized {
-      val matching = routesBySource
-        .getOrElse((incoming.source.kind, incoming.source.rootPath), Nil)
-        .filter(_.accepts(incoming))
-      // log ONLY events some route accepts (an unmatched event rebuilds
-      // nothing at replay, so logging it would just grow the WAL forever
-      // on a long-lived driver), at tip granularity (reference ONLY_HEAD
-      // processing mode) so a restart can rebuild pending state by
-      // replaying the events logged after the last snapshot.
-      // KNOWN TRADE-OFF: if a LATER driver adds a route consuming a
-      // source that fired only before the route existed, replay cannot
-      // seed that pending node (the event was never logged) — matching
-      // the reference, which also persists per-route records only; use
-      // execute/backfill to redeem pre-declaration events.
-      // KNOWN GRANULARITY LIMIT: a multi-partition event signal (e.g.
-      // ground() of a ranged view) replays as its tip partition only,
-      // and a node's receipts record tips too — completion checks still
-      // probe the real filesystem, but recovered pending nodes track the
-      // tip path, not the full range.
-      val logged = !replaying && matching.nonEmpty
-      if (logged) incoming.materializedPaths.headOption.foreach(p =>
-        checkpoint.foreach(_.appendEvent(p, isBlocked)))
-      val ctxs = matching.flatMap(_.receive(incoming, cachingProbe, isBlocked = isBlocked))
-      // after dispatch: a fold here snapshots this event's effect, since
-      // it drops the segment the event was just appended to
-      if (logged) maybeCompact(1)
-      ctxs
-    }
+    synchronized(dispatch(Offer.of(incoming), isBlocked))
+
+  private def dispatch(incoming: Offer, isBlocked: Boolean): List[ExecutionContext] = {
+    val matching = routesBySource
+      .getOrElse((incoming.kind, incoming.rootPath), Nil)
+      .filter(_.accepts(incoming))
+    // log ONLY events some route accepts (an unmatched event rebuilds
+    // nothing at replay, so logging it would just grow the WAL forever
+    // on a long-lived driver), at tip granularity (reference ONLY_HEAD
+    // processing mode) so a restart can rebuild pending state by
+    // replaying the events logged after the last snapshot.
+    // KNOWN TRADE-OFF: if a LATER driver adds a route consuming a
+    // source that fired only before the route existed, replay cannot
+    // seed that pending node (the event was never logged) — matching
+    // the reference, which also persists per-route records only; use
+    // execute/backfill to redeem pre-declaration events.
+    // KNOWN GRANULARITY LIMIT: a multi-partition event signal (e.g.
+    // ground() of a ranged view) replays as its tip partition only,
+    // and a node's receipts record tips too — completion checks still
+    // probe the real filesystem, but recovered pending nodes track the
+    // tip path, not the full range.
+    val logged = !replaying && matching.nonEmpty
+    if (logged) incoming.paths.headOption.foreach(p =>
+      checkpoint.foreach(_.appendEvent(p, isBlocked)))
+    val now = System.currentTimeMillis()
+    val ctxs = matching.flatMap(_.receiveOffer(incoming, cachingProbe, now, isBlocked))
+    // after dispatch: a fold here snapshots this event's effect, since
+    // it drops the segment the event was just appended to
+    if (logged) maybeCompact(1)
+    ctxs
+  }
 
   /** Live fold, so the log stays bounded between restarts of a
     * long-lived driver. Geometric (the size-ratio merge policy of
@@ -503,13 +547,13 @@ final class RoutingTable(probe: PathProbe,
       }
     }
     val byId = routes.iterator.map(r => r.id -> r).toMap
-    val decoded = scala.collection.mutable.HashMap.empty[String, List[Signal]]
+    val decoded = scala.collection.mutable.HashMap.empty[String, List[Offer]]
     def rebuild(r: Route, createdAtMillis: Long,
                 receipts: List[(String, Boolean)]): RuntimeLinkNode = {
       val n = r.newNode(createdAtMillis)
       receipts.foreach { case (p, b) =>
-        decoded.getOrElseUpdate(p, decode(p)).foreach(s =>
-          if (r.accepts(s)) n.receive(s, b))
+        decoded.getOrElseUpdate(p, decode(p)).foreach(o =>
+          if (r.accepts(o)) n.offer(o, b))
       }
       n
     }
@@ -556,21 +600,33 @@ final class RoutingTable(probe: PathProbe,
       // match their route's rootPath
       val normalized =
         if (p.getName.startsWith("part-")) p.getParent.toString else path
-      decode(normalized).flatMap(s => receive(s, isBlocked))
+      decode(normalized).flatMap(dispatch(_, isBlocked))
     }
 
-  /** The event signals of a normalized path, one per resource. Nested
-    * source roots are legal (boundary-aware prefix decode), so one path
-    * can decode against SEVERAL resources — dispatch every DISTINCT
-    * RESOURCE, not just the first. Dedup by resource, not by Signal:
-    * routes aliasing the same source each contribute a decode, but
-    * receive() already fans one resource's event out to every matching
-    * route — per-alias dispatch would multiply deliveries. */
-  private def decode(normalized: String): List[Signal] =
-    ancestorPrefixes(normalized)
-      .flatMap(r => signalsByRoot.getOrElse(r, Nil))
-      .flatMap(s => s.fromEventPath(normalized)).distinct
-      .distinctBy(s => (s.source.kind, s.source.rootPath))
+  /** The events of a normalized path, one per resource: the values of the
+    * first decoder, in declaration order, whose filter admits the path.
+    * Nested source roots are legal (boundary-aware prefix decode), so one
+    * path can decode against SEVERAL resources — dispatch every DISTINCT
+    * RESOURCE, not just the first. One event per resource, not per
+    * decoder: dispatch already fans a resource's event out to every
+    * matching route — per-alias dispatch would multiply deliveries.
+    * Every codec at those roots parses the path, admitted or not, so a
+    * segment one of them cannot parse throws wherever it sits. */
+  private def decode(normalized: String): List[Offer] = {
+    var parsedBy: EventDecoder.Codec = null
+    var parsed: Option[IndexedSeq[graft.dimension.DimValue]] = None
+    var out = List.empty[(EventDecoder, IndexedSeq[graft.dimension.DimValue])]
+    ancestorPrefixes(normalized).foreach { r =>
+      decodersByRoot.getOrElse(r, Nil).foreach { d =>
+        if (!(d.codec eq parsedBy)) { parsedBy = d.codec; parsed = d.values(normalized) }
+        val src = d.source
+        if (!out.exists { case (o, _) =>
+              o.source.kind == src.kind && o.source.rootPath == src.rootPath })
+          parsed.filter(d.admits).foreach(vs => out ::= ((d, vs)))
+      }
+    }
+    out.reverse.map { case (d, vs) => new Offer.OfPath(d.source, vs, findDecoder) }
+  }
 
   /** Re-run every route's pending completion checks without an event
     * (the orchestration-cycle sweep; see [[Route.sweep]]).
@@ -578,9 +634,10 @@ final class RoutingTable(probe: PathProbe,
     * Three phases so event ingestion NEVER waits on probe I/O (r13 —
     * previously the probes ran under the table monitor and a slow
     * remote store starved `receive()` for the whole sweep):
-    * snapshot the pending nodes' probe targets under the monitor (no
-    * I/O), probe them OUTSIDE it with bounded parallelism, then run the
-    * normal sweep under the monitor against the pre-probed snapshot.
+    * snapshot the armed nodes' probe targets under the monitor (no
+    * I/O; a node not armed can only wait for events), probe them OUTSIDE
+    * it with bounded parallelism, then run the normal sweep under the
+    * monitor against the pre-probed snapshot.
     * Targets that appear between the phases (a pending node created by
     * a concurrent event) miss the snapshot and fall through to a live
     * probe under the monitor — bounded by the handful of new nodes, not
@@ -600,17 +657,16 @@ final class RoutingTable(probe: PathProbe,
     val sel = (r: Route) => only.forall(_ == r.id)
     val perRoute = synchronized {
       routes.filter(r => sel(r) && r.pendingNodes.nonEmpty)
-        .map(r => r -> r.pendingNodes.flatMap(_.probeTargets).distinct)
+        .map(r => r -> r.pendingNodes.filter(_.armed).flatMap(_.probeTargets))
     }
-    val targets = perRoute.flatMap(_._2).distinct
-    val (snap, failedKeys) = probeOutsideMonitor(targets)
+    val (snap, failedKeys) = probeOutsideMonitor(perRoute.iterator.flatMap(_._2))
     synchronized {
       // attribute this tick's probe failures to the routes whose pending
       // nodes own the failing targets (a shared target counts on every
       // route waiting on it — each one's completion is equally stalled)
       if (failedKeys.nonEmpty) perRoute.foreach { case (r, ts) =>
         r.noteProbeFailures(
-          ts.count { case (p, proto) =>
+          ts.distinct.count { case (p, proto) =>
             probeKeys(p, proto).exists(failedKeys.contains) })
       }
       val sp = new SnapshotProbe(cachingProbe, snap)
@@ -647,15 +703,21 @@ final class RoutingTable(probe: PathProbe,
     }
 
   /** Phase 2: the sweep's probe I/O, monitor-free. Results land in a
-    * completion-keyed map ([[SnapshotProbe]]); parallelism is bounded so
-    * a 10k-node backlog against a high-latency store overlaps its
-    * round-trips instead of serializing them. */
+    * completion-keyed map ([[SnapshotProbe]]); a key the caching probe
+    * already holds as complete is not probed (the snapshot falls back to
+    * that answer). The rest are pulled from one shared index by at most
+    * `graft.sweep.parallelism` workers, the calling thread among them,
+    * so a 10k-node backlog against a high-latency store overlaps its
+    * round-trips instead of serializing them, and a cheap store costs no
+    * hand-off per key. */
   // shared probe pool, created lazily and reused across sweep ticks — a
   // per-tick fixed pool would churn up to `parallelism` threads every
   // sub-second poll. Daemon threads with core-timeout: the pool drains
   // itself to zero threads when sweeps go idle.
+  private lazy val sweepParallelism =
+    sys.props.getOrElse("graft.sweep.parallelism", "16").toInt
   private lazy val sweepProbePool: java.util.concurrent.ThreadPoolExecutor = {
-    val par = sys.props.getOrElse("graft.sweep.parallelism", "16").toInt
+    val par = sweepParallelism
     val tf = new java.util.concurrent.ThreadFactory {
       private val n = new java.util.concurrent.atomic.AtomicInteger()
       def newThread(r: Runnable): Thread = {
@@ -671,14 +733,16 @@ final class RoutingTable(probe: PathProbe,
   }
 
   private def probeOutsideMonitor(
-      targets: List[(String, graft.signal.IntegrityProtocol)])
+      targets: Iterator[(String, graft.signal.IntegrityProtocol)])
       : (java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean],
          Set[String]) = {
     val snap = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-    if (targets.isEmpty) return (snap, Set.empty)
-    // I/O-bound round-trips: size to the store's latency×throughput
-    // (-Dgraft.sweep.parallelism=64 for a 50 ms object store)
-    val pool = sweepProbePool
+    val seen = new java.util.HashSet[String]()
+    val keys = targets.flatMap { case (p, proto) =>
+      probeKeys(p, proto).iterator
+        .filter(k => !cachingProbe.holds(k) && seen.add(k)).map(k => (p, proto, k))
+    }.toArray
+    if (keys.isEmpty) return (snap, Set.empty)
     // Per-target fault isolation: a probe that throws (bad mount,
     // permissions, a flaky endpoint) folds to incomplete-FOR-THIS-SWEEP
     // on ITS key only — the snapshot records `false`, so the sweep
@@ -687,32 +751,37 @@ final class RoutingTable(probe: PathProbe,
     // aborted every route's sweep tick fleet-wide, forever. Transient
     // faults self-heal on a later sweep; the pending node keeps waiting.
     val failures = new java.util.concurrent.ConcurrentHashMap[String, Throwable]()
-    val futs = targets.flatMap { case (p, proto) =>
-      probeKeys(p, proto).map { key =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            try {
-              val ok = proto match {
-                case graft.signal.IntegrityProtocol.None_ =>
-                  cachingProbe.isComplete(p, proto)
-                case graft.signal.IntegrityProtocol.FileCheck(_) =>
-                  // per-NAME key: one exists() per alternative marker
-                  cachingProbe.exists(key)
-              }
-              snap.put(key, ok)
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                snap.put(key, java.lang.Boolean.FALSE)
-                failures.put(key, e)
-            }
+    val next = new java.util.concurrent.atomic.AtomicInteger()
+    val work: Runnable = () => {
+      var i = next.getAndIncrement()
+      while (i < keys.length) {
+        val (p, proto, key) = keys(i)
+        try {
+          val ok = proto match {
+            case graft.signal.IntegrityProtocol.None_ =>
+              cachingProbe.isComplete(p, proto)
+            case graft.signal.IntegrityProtocol.FileCheck(_) =>
+              // per-NAME key: one exists() per alternative marker
+              cachingProbe.exists(key)
           }
-        })
+          snap.put(key, ok)
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            snap.put(key, java.lang.Boolean.FALSE)
+            failures.put(key, e)
+        }
+        i = next.getAndIncrement()
       }
     }
-    futs.foreach { f =>
+    // I/O-bound round-trips: size to the store's latency×throughput
+    // (-Dgraft.sweep.parallelism=64 for a 50 ms object store)
+    val helpers = (1 until math.min(sweepParallelism, keys.length))
+      .map(_ => sweepProbePool.submit(work))
+    try work.run()
+    finally helpers.foreach { f =>
       try f.get()
       catch { case e: java.util.concurrent.ExecutionException =>
-        throw e.getCause } // only fatal errors escape call() now
+        throw e.getCause } // only fatal errors escape a probe
     }
     if (!failures.isEmpty) warnProbeFailures(failures)
     (snap, scala.jdk.CollectionConverters.SetHasAsScala(

@@ -51,6 +51,8 @@ final class CachingProbe(underlying: PathProbe) extends PathProbe {
     * (reference transfer_ranges, routing_runtime_constructs.py:370-395). */
   def markComplete(paths: Iterable[String]): Unit =
     paths.foreach(known.put(_, java.lang.Boolean.TRUE))
+  /** Is `path` already known complete (marked, or probed positive)? */
+  def holds(path: String): Boolean = known.containsKey(path)
   /** Every path [[markComplete]] was given. */
   def markedPaths: Seq[String] = {
     val b = Vector.newBuilder[String]
@@ -80,12 +82,23 @@ final class RuntimeLinkNode(
   private val blockedPaths = scala.collection.mutable.Set.empty[String]
   /** The offers that changed this node's state, newest first. */
   private var receiptsRev: List[(String, Boolean)] = Nil
-  var isZombie: Boolean = false
+  private var zombie = false
+  private var armedNow = false
   /** Highest pending-node checkpoint mark (secs) already fired for this
     * node (reference last_checkpoint_mark, constructs.py:2812-2817). */
   private[routing] var lastCheckpointMark: Long = 0L
 
   def ready: List[Signal] = readySignals
+
+  /** Can never fire: a declared filter rejects what its links imply, or a
+    * link mapper threw. */
+  def isZombie: Boolean = zombie
+
+  /** Every input is ready and the node is no zombie: only completion
+    * probes stand between it and firing, so only an armed node is worth
+    * a sweep's look. Updated by each offer, the only thing that changes
+    * either. */
+  def armed: Boolean = armedNow
 
   /** (tip path, blocked) of every offer that changed this node's ready
     * signals or blocked paths, in arrival order. An offer that changed
@@ -104,8 +117,9 @@ final class RuntimeLinkNode(
     * the candidate must map to the candidate's tip value.
     * Reference: _check_links, routing_runtime_constructs.py:474-500. */
   private def checkLinks(candidate: Signal): Boolean = {
+    val into = node.linksInto(candidate.alias)
     readySignals.forall { rs =>
-      node.linksBetween(rs.alias, candidate.alias).forall { link =>
+      into.getOrElse(rs.alias, node.linksBetween(rs.alias, candidate.alias)).forall { link =>
         val tgtDim = link.target.dim
         val mappedOpt: Option[DimValue] = link.source match {
           case LinkSource.FromDim(r) => rs.tipValue(r.dim).map(link.func)
@@ -130,25 +144,6 @@ final class RuntimeLinkNode(
     }
   }
 
-  /** Zombie prediction (J3): if the inputs reverse-materialized from the
-    * partially-materialized output violate any input's declared filter, the
-    * node can never complete. Reference: predict_if_zombie,
-    * routing_runtime_constructs.py:547-614. */
-  private def predictZombie(): Boolean = {
-    try {
-      node.materializedInputsForOutput(
-        materializeOutput(force = true), outputLinks,
-        alreadyMaterialized = readySignals, enforceAll = false) match {
-        case Some(inputs) =>
-          // an input materialized to an empty filter = declared filter
-          // rejected it. Dimension-less inputs (reference lookups) have an
-          // empty filter BY CONSTRUCTION — they can never be rejected.
-          inputs.exists(i => i.dimNames.nonEmpty && i.filter.isEmpty)
-        case None => false
-      }
-    } catch { case _: Exception => true }
-  }
-
   /** Offer an incoming concrete signal (J7 receive). Returns true if
     * consumed. Reference: receive, routing_runtime_constructs.py:616-675. */
   def receive(incoming: Signal): Boolean = receive(incoming, isBlocked = false)
@@ -157,39 +152,44 @@ final class RuntimeLinkNode(
     * _update_blocked_ranges, routing_runtime_constructs.py:397-472): the
     * signal is admitted but the node won't fire while any ready resource is
     * blocked; a later un-blocked event for the same path clears it. */
-  def receive(incoming: Signal, isBlocked: Boolean): Boolean = {
-    val paths = incoming.materializedPaths
+  def receive(incoming: Signal, isBlocked: Boolean): Boolean =
+    offer(Offer.of(incoming), isBlocked)
+
+  /** [[receive]] of an event whose candidates the caller shares. */
+  private[routing] def offer(o: Offer, isBlocked: Boolean): Boolean = {
+    val paths = o.paths
     val blockChanged = paths.foldLeft(false) { (changed, p) =>
       (if (isBlocked) blockedPaths.add(p) else blockedPaths.remove(p)) || changed
     }
     val before = readySignals
-    val consumed = consume(incoming)
+    val consumed = consume(o)
     if ((blockChanged || (readySignals ne before)) && paths.nonEmpty)
       receiptsRev ::= ((paths.head, isBlocked))
+    armedNow = !zombie && allSignalsReady
     consumed
   }
 
-  private def consume(incoming: Signal): Boolean = {
-    if (incoming.materializedPaths.toSet.subsetOf(processedPaths)) return true
+  private def consume(o: Offer): Boolean = {
+    if (o.paths.forall(processedPaths.contains)) return true
 
     var consumed = false
     // every declared input sharing the resource sees the event (multi-alias
     // inputs over one dataset are legal, reference advanced_input_modes)
-    node.signals.filter(_.sameResource(incoming)).foreach { declared =>
-      declared.applyEvent(incoming) match {
-        case None => // declared filter rejected this event for this alias
+    node.signals.foreach { declared =>
+      o.candidate(declared) match {
+        case None => // other resource, or its filter rejected this event
         case Some(candidate) =>
-          // containment for the THIRD user-mapper path (resolveDependents
-          // and predictZombie already have theirs): a throwing link
-          // mapper — or a malformed link target — escaping here kills the
-          // driver's event-ingestion loop AND wedges WAL recovery forever
-          // (the event is already logged; replay re-throws on every
-          // restart). The node can never fire consistently with its
-          // links: zombie it so the sweep reaps it.
+          // containment for the OTHER user-mapper path (reverseMaterialize
+          // has its own): a throwing link mapper — or a malformed link
+          // target — escaping here kills the driver's event-ingestion
+          // loop AND wedges WAL recovery forever (the event is already
+          // logged; replay re-throws on every restart). The node can
+          // never fire consistently with its links: zombie it so the
+          // sweep reaps it.
           val linksOk =
             try checkLinks(candidate)
             catch { case scala.util.control.NonFatal(_) =>
-              isZombie = true
+              zombie = true
               false
             }
           if (linksOk) {
@@ -198,9 +198,8 @@ final class RuntimeLinkNode(
               if (candidate.isReference || candidate.nearestTheTip) consumed = true
             } else {
               readySignals :+= candidate
-              processedPaths ++= incoming.materializedPaths
-              isZombie = isZombie || predictZombie()
-              resolveDependents()
+              processedPaths ++= o.paths
+              reverseMaterialize()
               consumed = true
             }
           }
@@ -209,30 +208,33 @@ final class RuntimeLinkNode(
     consumed
   }
 
-  /** Reference/dependent input resolution (J2): once the output can be
-    * (partially) materialized from ready signals, derive the remaining
-    * reference/nearest inputs transitively — they never get events.
-    * Reference: _check_dependents, routing_runtime_constructs.py:502-545. */
-  private def resolveDependents(): Unit = {
-    if (readySignals.isEmpty) return
-    val dependents = node.signals.filter(s => s.isReference || s.nearestTheTip)
-    if (dependents.isEmpty) return
-    try {
-      val out = materializeOutput(force = true)
-      node.materializedInputsForOutput(out, outputLinks,
-        alreadyMaterialized = readySignals, enforceAll = false).foreach { inputs =>
-        inputs.foreach { m =>
-          if ((m.isReference || m.nearestTheTip) &&
-              !readySignals.exists(_.alias == m.alias) && m.isMaterialized)
-            readySignals :+= m
-        }
+  /** The inputs reverse-materialized from the partially-materialized
+    * output, computed once per newly ready signal and read twice:
+    *  - zombie prediction (J3): if any violates its declared filter, the
+    *    node can never complete (reference predict_if_zombie,
+    *    routing_runtime_constructs.py:547-614);
+    *  - dependent resolution (J2): reference/nearest inputs never get
+    *    events, so they are derived here once materializable (reference
+    *    _check_dependents, routing_runtime_constructs.py:502-545).
+    * Any failure (a missing linked dim, a user link mapper throwing on an
+    * unexpected tip value) makes the node a zombie instead of escaping
+    * into — and killing — the driver's event-ingestion loop. */
+  private def reverseMaterialize(): Unit = {
+    val inputs =
+      try node.materializedInputsForOutput(
+        materializeOutput(force = true), outputLinks,
+        alreadyMaterialized = readySignals, enforceAll = false)
+      catch { case scala.util.control.NonFatal(_) => zombie = true; None }
+    inputs.foreach { ins =>
+      // an input materialized to an empty filter = declared filter
+      // rejected it. Dimension-less inputs (reference lookups) have an
+      // empty filter BY CONSTRUCTION — they can never be rejected.
+      if (ins.exists(i => i.dimNames.nonEmpty && i.filter.isEmpty)) zombie = true
+      ins.foreach { m =>
+        if ((m.isReference || m.nearestTheTip) &&
+            !readySignals.exists(_.alias == m.alias) && m.isMaterialized)
+          readySignals :+= m
       }
-    } catch {
-      // any failure here (missing linked dim, but also a user-supplied
-      // link mapper throwing on an unexpected tip value) marks the node
-      // zombie instead of escaping into — and killing — the driver's
-      // event-ingestion loop; predictZombie uses the same breadth
-      case scala.util.control.NonFatal(_) => isZombie = true
     }
   }
 
@@ -243,9 +245,10 @@ final class RuntimeLinkNode(
   /** Full readiness: signals ready + completion checks pass (J5).
     * `nearestTheTip` inputs narrow to the first existing partition. */
   def isReady(probe: PathProbe): Boolean = {
-    if (isZombie || !allSignalsReady) false
+    if (!armedNow) false
     else readySignals.forall { s =>
-      val unblocked = s.materializedPaths.forall(p => !blockedPaths.contains(p))
+      val unblocked = blockedPaths.isEmpty ||
+        s.materializedPaths.forall(p => !blockedPaths.contains(p))
       unblocked && {
         if (s.nearestTheTip) nearestExisting(s, probe).isDefined
         else if (s.rangeCheckRequired)
@@ -267,7 +270,7 @@ final class RuntimeLinkNode(
     * [[isReady]]'s probe set (a missed target only costs a live probe
     * under the monitor, never a wrong answer). */
   def probeTargets: List[(String, IntegrityProtocol)] =
-    if (isZombie || !allSignalsReady) Nil
+    if (!armedNow) Nil
     else readySignals.flatMap { s =>
       if (s.nearestTheTip || s.rangeCheckRequired)
         s.materializedPaths.map(p => (p, s.source.protocol))
@@ -318,6 +321,6 @@ object RuntimeLinkNode {
     * non-nearest signals or when nothing exists yet). */
   def narrowNearest(s: Signal, probe: PathProbe): Signal =
     if (s.nearestTheTip)
-      nearestExisting(s, probe).flatMap(s.fromEventPath).getOrElse(s)
+      nearestExisting(s, probe).flatMap(new EventDecoder(s).signalAt).getOrElse(s)
     else s
 }

@@ -1017,13 +1017,13 @@ final class ShardedDriver(root: String, val driverId: String,
   // heartbeating instead of being stolen mid-takeover.
   private val heldLeases =
     new java.util.concurrent.ConcurrentHashMap[Int, ShardLease]()
-  // Shard-dispatch index (the RoutingTable.signalsByRoot convention
-  // lifted to shards): source root -> (signal, shard) for every
+  // Shard-dispatch index (the RoutingTable.decodersByRoot convention
+  // lifted to shards): source root -> (compiled decoder, shard) for every
   // non-reference route input. acceptingShards probes only the event
   // path's ancestor prefixes — O(path depth) — instead of scanning
   // every def's signals per event under the driver monitor.
-  private var signalsByRootShard =
-    Map.empty[String, List[(graft.signal.Signal, Int)]]
+  private var decodersByRootShard =
+    Map.empty[String, List[(graft.signal.EventDecoder, Int)]]
 
   def shardOf(routeId: String): Int = Sharding.shardOf(routeId, numShards)
 
@@ -1035,8 +1035,8 @@ final class ShardedDriver(root: String, val driverId: String,
     val sh = shardOf(c.id)
     c.linkNode.signals.filterNot(_.isReference).foreach { s =>
       val root = s.source.rootPath.stripSuffix("/")
-      signalsByRootShard = signalsByRootShard.updated(root,
-        signalsByRootShard.getOrElse(root, Nil) :+ (s -> sh))
+      decodersByRootShard = decodersByRootShard.updated(root,
+        decodersByRootShard.getOrElse(root, Nil) :+ (new graft.signal.EventDecoder(s) -> sh))
     }
   }
 
@@ -1234,8 +1234,8 @@ final class ShardedDriver(root: String, val driverId: String,
     val normalized =
       if (p.getName.startsWith("part-")) p.getParent.toString else path
     RoutingPaths.ancestorPrefixes(normalized)
-      .flatMap(r => signalsByRootShard.getOrElse(r, Nil))
-      .collect { case (s, sh) if s.fromEventPath(normalized).isDefined => sh }
+      .flatMap(r => decodersByRootShard.getOrElse(r, Nil))
+      .collect { case (d, sh) if d.values(normalized).exists(d.admits) => sh }
       .toSet
   }
 

@@ -89,9 +89,24 @@ final case class SignalLinkNode(
     copy(links = links ++ extra)
   }
 
+  /** [[linksBetween]] of every pair of input aliases, by target alias then
+    * source alias, built once: the runtime join asks for them on every
+    * offer. */
+  private lazy val linksByTarget: Map[String, Map[String, List[DimensionLink]]] =
+    signals.map(b => b.alias ->
+      signals.map(a => a.alias -> collectLinks(a.alias, b.alias)).toMap).toMap
+
   /** Links whose value can be produced from `srcAlias` toward `dstAlias`,
     * including reversed identity links. */
-  def linksBetween(srcAlias: String, dstAlias: String): List[DimensionLink] = {
+  def linksBetween(srcAlias: String, dstAlias: String): List[DimensionLink] =
+    linksInto(dstAlias).getOrElse(srcAlias, collectLinks(srcAlias, dstAlias))
+
+  /** [[linksBetween]] toward `dstAlias`, by source alias (input aliases
+    * only). */
+  def linksInto(dstAlias: String): Map[String, List[DimensionLink]] =
+    linksByTarget.getOrElse(dstAlias, Map.empty)
+
+  private def collectLinks(srcAlias: String, dstAlias: String): List[DimensionLink] = {
     val direct = links.collect {
       case l @ DimensionLink(DimRef(`dstAlias`, _), LinkSource.FromDim(DimRef(`srcAlias`, _)), _) => l
       case l @ DimensionLink(DimRef(`dstAlias`, _), LinkSource.FromDims(rs, _), _)

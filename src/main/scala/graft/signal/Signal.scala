@@ -21,7 +21,7 @@ final case class Signal(
     rangeCheckRequired: Boolean = false,
     nearestTheTip: Boolean = false) {
 
-  def dimNames: List[String] = spec.flatten.flatMap(_.name)
+  def dimNames: List[String] = spec.flatNames
 
   /** Apply an incoming (concrete) signal's filter to this declared signal:
     * intersection with finalize=true — relatives explode into ranges.
@@ -38,14 +38,25 @@ final case class Signal(
   def sameResource(other: Signal): Boolean =
     source.kind == other.source.kind && source.rootPath == other.source.rootPath
 
-  /** Most-recent/head partition tuple (the "tip"). */
-  def tip: List[DimValue] = filter.tuples.headOption.getOrElse(Nil)
+  /** Most-recent/head partition tuple (the "tip"): the first root→leaf
+    * path of the filter, computed once per immutable instance — link
+    * checks and output materialization read it on every offer. */
+  lazy val tip: List[DimValue] = {
+    var out = List.empty[DimValue]
+    var level = filter
+    while (!level.isEmpty) {
+      val (v, sub) = level.nodes.head
+      out ::= v
+      level = sub
+    }
+    out.reverse
+  }
 
   // a dim's POSITION in the value tuples: the tuple carries every dim,
   // so indexing must run over the full flattened spec — `dimNames`
   // drops unnamed dims and would misalign every lookup after one
   private def dimIndex(dimName: String): Int =
-    spec.flatten.indexWhere(_.name.contains(dimName))
+    spec.flatten.indexWhere(d => d.name.isDefined && d.name.get == dimName)
 
   /** Tip value of a named dimension. */
   def tipValue(dimName: String): Option[DimValue] = {
@@ -62,23 +73,6 @@ final case class Signal(
     * immutable instance instead of once per offer is the difference
     * between O(1) and O(pending) path formatting per event. */
   lazy val materializedPaths: Seq[String] = source.materializePaths(filter)
-
-  /** Build the concrete signal for a physical resource path (the event
-    * codec direction). Reference: Signal.create, signal.py:405-468. */
-  def fromEventPath(path: String): Option[Signal] = {
-    val depth = spec.flatten.length
-    source.extractDims(path, depth).flatMap { raws =>
-      if (raws.length != depth) None
-      else {
-        val branch = DimFilter.branchOf(spec, raws)
-        // validate against the declared filter (chain, not finalize — a
-        // declared range should accept any event within compatible spec)
-        filter.chain(branch).flatMap { chained =>
-          if (chained.isEmpty) None else Some(copy(filter = branch))
-        }
-      }
-    }
-  }
 
   /** Materialize this (possibly range/wildcard) signal against concrete
     * per-dimension values; dims absent from `values` keep their declared

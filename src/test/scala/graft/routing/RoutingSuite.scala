@@ -720,4 +720,36 @@ class RoutingSuite extends AnyFunSuite {
       chainedSignal("a", "/data/a", daySpec, "2026-08-12"), allExists)
     assert(ctxs.isEmpty)
   }
+
+  test("a sweep probes armed nodes only; an armed node fires once its range lands") {
+    val a = Signal("a", SignalSource.external("/data/a"), daySpec,
+      DimFilter.loadRaw(daySpec, DimFilter.RawFilter.leafValues("_:-2")),
+      rangeCheckRequired = true)
+    val b = extSignal("b", "/data/b", daySpec, "*")
+    val node = SignalLinkNode(List(a, b)).withAutoLinks
+    var calls = 0
+    val probe = new MemProbe() {
+      override def exists(path: String): Boolean = { calls += 1; super.exists(path) }
+    }
+    val t = new RoutingTable(probe)
+    t.add(new Route("armed", node, outputFor(node, "armed", daySpec), Nil))
+    val route = t.find("armed").get
+    // `a` alone: its node waits for `b`, so it is not armed
+    assert(t.receivePath("/data/a/2026-08-12").isEmpty)
+    assert(route.pendingNodes.map(_.armed) == List(false))
+    calls = 0
+    assert(t.sweepPending().isEmpty)
+    assert(calls == 0, "a node that is not armed must cost no probe call")
+    // `b` arms it; its range {12, 11} has not landed
+    assert(t.receivePath("/data/b/2026-08-12").isEmpty)
+    assert(route.pendingNodes.map(_.armed) == List(true))
+    probe.existing += "/data/a/2026-08-12"
+    assert(t.sweepPending().isEmpty)
+    probe.existing += "/data/a/2026-08-11"
+    val fired = t.sweepPending()
+    assert(fired.map(_.routeId) == List("armed"))
+    assert(fired.head.inputs.find(_.alias == "a").get.materializedPaths ==
+      Seq("/data/a/2026-08-12", "/data/a/2026-08-11"))
+    assert(route.pendingNodes.isEmpty)
+  }
 }
